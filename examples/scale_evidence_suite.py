@@ -19,9 +19,12 @@ surface, composed as an operations run would use it:
    SimHash index whose oversized buckets verify against their hub
    only (O(cap) work/state per arrival — the batch d13 contract
    streamed),
-6. an iterative op on the reliable-checkpoint path: PageRank with
-   checkpoint_dir set, the executor-loss-safe mode a 1000-executor
-   job runs (results identical to the localCheckpoint default).
+6. the executor-loss-safe mode a 1000-executor job runs: once the
+   context has a reliable checkpoint directory (``spark.checkpoint.dir``
+   at start-up or ``SparkContext.setCheckpointDir``), every pin in the
+   package — PageRank's rounds here, and every later step — writes
+   reliable checkpoints (results identical to the localCheckpoint
+   default).
 
 Every stage is declarative and broadcast-bounded; nothing reaches the
 driver except the printed summaries.
@@ -90,6 +93,7 @@ def main() -> None:
         f"family members whose only reported neighbour is the hub: {capped}"
     )
 
+    import shutil
     import tempfile
 
     from kafka_flink_spark.operators.graph import pagerank
@@ -98,12 +102,10 @@ def main() -> None:
         [(0, 1), (1, 2), (2, 0), (2, 3)], "src long, dst long"
     )
     nodes = spark.range(4).selectExpr("id")
-    with tempfile.TemporaryDirectory(prefix="pr_ck_") as ck:
-        local = {r.id: r.pr for r in pagerank(nodes, edges, "id", iterations=5).collect()}
-        durable = {
-            r.id: r.pr
-            for r in pagerank(nodes, edges, "id", iterations=5, checkpoint_dir=ck).collect()
-        }
+    local = {r.id: r.pr for r in pagerank(nodes, edges, "id", iterations=5).collect()}
+    ck = tempfile.mkdtemp(prefix="pr_ck_")
+    spark.sparkContext.setCheckpointDir(ck)
+    durable = {r.id: r.pr for r in pagerank(nodes, edges, "id", iterations=5).collect()}
     print(
         f"6. reliable-checkpoint PageRank: identical to localCheckpoint "
         f"run on all {len(local)} nodes: {local == durable}"
@@ -158,6 +160,7 @@ def main() -> None:
     )
 
     spark.stop()
+    shutil.rmtree(ck, ignore_errors=True)
 
 
 if __name__ == "__main__":

@@ -35,6 +35,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from kafka_flink_spark.operators.iterative import pin
 from kafka_flink_spark.operators.similarity import _as_double
 
 
@@ -110,7 +111,6 @@ def _fit(
     k: int,
     iterations: int,
     id_col: str,
-    checkpoint_dir: str | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Shared Lloyd loop: returns (final centroids, final assignment)."""
     w = Window.orderBy(id_col)
@@ -130,9 +130,7 @@ def _fit(
         # rounds is ~free and keeps the plan depth bounded; the default
         # iterations=2 never pays it.
         if (it + 1) % 4 == 0 and it != iterations - 1:
-            from kafka_flink_spark.operators.iterative import lineage_truncator
-
-            cents = lineage_truncator(base.sparkSession, checkpoint_dir)(cents)
+            cents = pin(cents)
         assigned = _assign(base, cents, id_col)
     return cents, assigned
 
@@ -143,7 +141,6 @@ def kmeans_fit(
     iterations: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Lloyd's k-means: returns the final (id, cid, d2) assignment.
 
@@ -154,7 +151,7 @@ def kmeans_fit(
     identically).
     """
     base = df.select(F.col(id_col), _as_double(vec_col).alias("v"))
-    return _fit(base, k, iterations, id_col, checkpoint_dir)[1]
+    return _fit(base, k, iterations, id_col)[1]
 
 
 def kmeans_centroids(
@@ -163,14 +160,13 @@ def kmeans_centroids(
     iterations: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """The trained centroid relation (cid, c) after ``iterations``
     Lloyd rounds — the learned coarse quantizer that plugs into
     ``similarity.ivf_topk(centroids=...)`` in place of its
     assignment-only lowest-id cells."""
     base = df.select(F.col(id_col), _as_double(vec_col).alias("v"))
-    return _fit(base, k, iterations, id_col, checkpoint_dir)[0]
+    return _fit(base, k, iterations, id_col)[0]
 
 
 def kmeans_profile(
@@ -179,12 +175,11 @@ def kmeans_profile(
     iterations: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Cluster profile after ``iterations`` Lloyd rounds: size, inertia
     (sum of squared distances, rounded), and the smallest member id —
     the summary a corpus-binning pipeline reports per topic cell."""
-    assigned = kmeans_fit(df, k, iterations, id_col, vec_col, checkpoint_dir)
+    assigned = kmeans_fit(df, k, iterations, id_col, vec_col)
     return assigned.groupBy(F.col("cid").alias("cluster_id")).agg(
         F.count("*").cast("long").alias("n_members"),
         # micro-quantized exact sum (w14 recipe): a raw

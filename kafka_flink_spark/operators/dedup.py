@@ -34,6 +34,8 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from kafka_flink_spark.operators.iterative import pin
+
 SHINGLE_K = 3
 NUM_PERMS = 16
 NUM_BANDS = 8  # 8 bands × 2 rows: P(candidate) = 1-(1-j^2)^8 — 0.9 @ j≈0.5
@@ -223,18 +225,16 @@ def minhash_lsh_pairs(
     # a quadratic PAIR SET is inherent to emitting all pairs, but no
     # join input is ever quadratic-amplified (×num_bands) anymore.
     # The signature relation feeds the member mapping, the rep table,
-    # and (through them) every downstream join. EAGER localCheckpoint
+    # and (through them) every downstream join. EAGER pin
     # (not a lazy persist): the final job reads it from 3+ branches
     # concurrently, and a lazy cache races partition-level — measured
     # at the bench corpus (r12), up to 3x duplicate executions of the
     # corpus-wide signature aggregation plus repeated Catalyst
     # re-analysis of the full lineage; pinning it once took the whole
     # pair path from 3.4s to 1.6s. num_perms+2 longs per doc: bounded.
-    # Durability note: executor-local blocks (guide §5) — acceptable
-    # because the relation is cheap to rebuild relative to the query.
     sigs = sigs.withColumn(
         "_gfp", F.md5(F.concat_ws(":", *[F.col(c).cast("string") for c in sig_cols]))
-    ).localCheckpoint()
+    ).transform(pin)
     # doc → signature-group mapping; feeds the within-group self-join
     # and both expansion joins (narrow: id + 32-char fp per doc).
     members = sigs.select(F.col(id_col), "_gfp")
@@ -242,7 +242,7 @@ def minhash_lsh_pairs(
     # the pinned signatures); checkpointed because the banding
     # self-join reads it from two aliases plus the dup-group filter
     # (exchange reuse doesn't fire across aliased self-joins). Eager
-    # localCheckpoint over lazy persist: re-measured in r12, the lazy
+    # pin over lazy persist: re-measured in r12, the lazy
     # cache race + lineage re-analysis cost ~2x the extra
     # materialization jobs (the r5-era "lazy wins" measurement did not
     # hold at the current operator shape).
@@ -253,7 +253,7 @@ def minhash_lsh_pairs(
             F.count("*").alias("_n"),
             *[F.first(c).alias(c) for c in sig_cols],
         )
-        .localCheckpoint()
+        .transform(pin)
     )
     band_arr = F.array(
         *[
@@ -279,7 +279,7 @@ def minhash_lsh_pairs(
         # partitioning is exactly what the self-join requires, so no
         # additional corpus-sized exchange appears.
         # The windowed relation feeds three consumers (both self-join
-        # sides + the star path); eager localCheckpoint so the window
+        # sides + the star path); eager pin so the window
         # subplan runs once, not thrice (same r12 measurement as sigs/
         # reps above). num_bands rows of a few longs per distinct
         # signature — bounded.
@@ -287,7 +287,7 @@ def minhash_lsh_pairs(
             "*",
             F.count("*").over(wspec).alias("_bn"),
             F.min(F.struct("_rep", "_gfp")).over(wspec).alias("_hub"),
-        ).localCheckpoint()
+        ).transform(pin)
         small = banded.filter(F.col("_bn") <= bucket_cap)
         big = banded.filter(F.col("_bn") > bucket_cap)
         star_pairs = big.filter(F.col("_gfp") != F.col("_hub._gfp")).select(
@@ -346,7 +346,7 @@ def minhash_lsh_pairs(
     # the eager pin stops the banding join from re-running per branch.
     # Candidate pairs are orders of magnitude fewer than the corpus —
     # near-identical docs are rare by mass — so this pin is tiny.
-    cand = cand.localCheckpoint()
+    cand = pin(cand)
     # Exact-Jaccard verification over candidate docs only: the shingle
     # arrays are recomputed just for ids surviving banding (the semi
     # join is on the id column, so Catalyst defers the shingle
@@ -360,7 +360,7 @@ def minhash_lsh_pairs(
     cand_sh = (
         df.join(cand_ids, id_col, "left_semi")
         .select(F.col(id_col), shingle_array(col).alias("sh"))
-        .localCheckpoint()  # read by both verify sides (r12: eager pin)
+        .transform(pin)  # read by both verify sides (r12: eager pin)
     )
     sa = cand_sh.select(F.col(id_col).alias("doc_a"), F.col("sh").alias("sh_a"))
     sb = cand_sh.select(F.col(id_col).alias("doc_b"), F.col("sh").alias("sh_b"))
@@ -617,11 +617,11 @@ def simhash_near_pairs(
     # Signatures feed BOTH sides of the bucket self-join; without
     # pinning Spark recomputes the 60-vote aggregation per side
     # (exchange reuse doesn't fire across the aliased self-join).
-    # Eager localCheckpoint over the earlier lazy persist: re-measured
+    # Eager pin over the earlier lazy persist: re-measured
     # in r12 (see minhash_lsh_pairs), the cache race + lineage
     # re-analysis cost more than the one materialization job. One
     # long per doc — bounded.
-    sigs = simhash(df, col, id_col).localCheckpoint()
+    sigs = pin(simhash(df, col, id_col))
     return hamming_near_pairs(
         sigs,
         id_col=id_col,
@@ -668,7 +668,7 @@ def hamming_near_pairs(
     reps = (
         sigs.groupBy("simhash")
         .agg(F.min(id_col).alias("_rep"), F.count("*").alias("_n"))
-        .localCheckpoint()  # banding + dup-group consumers (r12 pin)
+        .transform(pin)  # banding + dup-group consumers (r12 pin)
     )
     base, extra = divmod(SIMHASH_BITS, num_chunks)
     chunk_cols, start = [], 0
@@ -713,7 +713,7 @@ def hamming_near_pairs(
             "*",
             F.count("*").over(wspec).alias("_bn"),
             F.min(F.struct("_rep", "simhash")).over(wspec).alias("_hub"),
-        ).localCheckpoint()
+        ).transform(pin)
         small = banded.filter(F.col("_bn") <= bucket_cap)
         star_xor = F.col("simhash").bitwiseXOR(F.col("_hub.simhash"))
         star_pairs = (
@@ -793,7 +793,6 @@ def dedup_clusters(
     pairs: DataFrame,
     id_col: str = "doc_id",
     max_iterations: int = 20,
-    checkpoint_dir: str | None = None,
     broadcast_labels: bool | None = None,
 ) -> DataFrame:
     """Connected components over a near-dup pair relation: every doc
@@ -807,11 +806,11 @@ def dedup_clusters(
     smallest label among itself and its neighbors, then labels jump to
     their label's label — so convergence takes O(log diameter) rounds,
     not diameter (a 1000-link chain resolves in ~10 rounds). Each
-    round's result is ``localCheckpoint``-ed: without truncation the
-    logical plan doubles per round and Catalyst re-analysis, not the
-    data, becomes the cost. The driver reads only a changed-count
-    scalar per round. Iterative and therefore not single-SQL-
-    expressible — the oracle uses a recursive CTE.
+    round's result is pinned (``operators.iterative.pin``): without
+    truncation the logical plan doubles per round and Catalyst
+    re-analysis, not the data, becomes the cost. The driver reads only
+    a changed-count scalar per round. Iterative and therefore not
+    single-SQL-expressible — the oracle uses a recursive CTE.
 
     ``broadcast_labels`` (None = auto below graph.BROADCAST_NODE_LIMIT
     ids): the label relation is node-sized, so below the limit it
@@ -820,18 +819,15 @@ def dedup_clusters(
     materialization; above it the loop falls back to shuffle joins.
     Values identical either way — physical join strategy only.
     """
-    from kafka_flink_spark.operators.iterative import lineage_truncator
-
-    _ck = lineage_truncator(ids.sparkSession, checkpoint_dir)
     edges = (
         pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
         .union(pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))
         .distinct()
-        .transform(_ck)  # edges re-join every round; compute the pair generator once
+        .transform(pin)  # edges re-join every round; compute the pair generator once
     )
     labels = ids.select(
         F.col(id_col), F.col(id_col).alias("cluster_id")
-    ).transform(_ck)
+    ).transform(pin)
     init_labels = labels
     n_ids = init_labels.count()
     if broadcast_labels is None:
@@ -908,7 +904,7 @@ def dedup_clusters(
                     (~F.col("cluster_id").eqNullSafe(F.col("_old"))).cast("long")
                 ).alias("n"),
             )
-            .transform(_ck)
+            .transform(pin)
         )
         changed = obs.get["n"] or 0
         labels = new_labels.select(id_col, "cluster_id")
@@ -977,7 +973,7 @@ def incremental_dedup(
             F.posexplode(band_arr).alias("band_id", "band_key"),
         )
 
-    bn = banded(sig_n, "new_id").localCheckpoint()  # 2 join uses (r12)
+    bn = pin(banded(sig_n, "new_id"))  # 2 join uses (r12)
     be = banded(sig_e, "_pid")
     cand_e = (
         bn.join(be, ["band_id", "band_key"])
@@ -993,7 +989,7 @@ def incremental_dedup(
         .select("new_id", F.col("_pid").alias("partner"), F.lit(1).alias("ptype"))
         .dropDuplicates(["new_id", "partner"])
     )
-    cand = cand_e.unionByName(cand_n).localCheckpoint()  # 3 consumers (r12)
+    cand = pin(cand_e.unionByName(cand_n))  # 3 consumers (r12)
 
     # verification shingles only for docs appearing in candidates
     all_docs = existing.unionByName(new)
@@ -1005,7 +1001,7 @@ def incremental_dedup(
     cand_sh = (
         all_docs.join(cand_ids, id_col, "left_semi")
         .select(F.col(id_col), shingle_array(col).alias("sh"))
-        .localCheckpoint()
+        .transform(pin)
     )
     sa = cand_sh.select(F.col(id_col).alias("new_id"), F.col("sh").alias("sh_a"))
     sb = cand_sh.select(F.col(id_col).alias("partner"), F.col("sh").alias("sh_b"))

@@ -20,16 +20,13 @@ nodes, so the edge relation — the side that is actually big at
 100 TB — is shuffled ZERO times per round (one node-sized map-side-
 combined exchange remains); above the limit the loop falls back to
 shuffle joins (``broadcast_ranks`` overrides either way, values
-identical). Per-round lineage truncation (otherwise
-the classic iterative-Spark trap) is a KNOB on every iterative op
-here: the default ``checkpoint_dir=None`` uses ``localCheckpoint`` —
-fastest, but its executor-local blocks are LOST on executor death, so
-on a real cluster one lost executor mid-iteration fails the job
-unrecoverably; pass ``checkpoint_dir`` (shared storage on a real
-cluster) for reliable ``checkpoint()`` that survives executor loss.
-Results are identical either way — see operators/iterative.py for the
-full durability/latency rationale. Fixed iteration count (no
-convergence test) keeps the oracle expressible as unrolled SQL.
+identical). Per-round lineage truncation (otherwise the classic
+iterative-Spark trap) goes through ``operators.iterative.pin``: the
+executor-loss-safe reliable ``checkpoint()`` once the context has a
+checkpoint directory (``spark.checkpoint.dir`` or
+``SparkContext.setCheckpointDir``), the faster ``localCheckpoint``
+otherwise; results are identical either way. Fixed iteration count
+(no convergence test) keeps the oracle expressible as unrolled SQL.
 """
 
 from __future__ import annotations
@@ -37,7 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from kafka_flink_spark.operators.iterative import lineage_truncator
+from kafka_flink_spark.operators.iterative import pin
 
 PR_SCALE = 10**12
 PR_DAMP_NUM = 85
@@ -67,7 +64,6 @@ def pagerank(
     id_col: str = "id",
     iterations: int = 10,
     checkpoint_every: int = 2,
-    checkpoint_dir: str | None = None,
     broadcast_ranks: bool | None = None,
 ) -> DataFrame:
     """Fixed-point PageRank: ``nodes`` one row per node (column
@@ -95,8 +91,7 @@ def pagerank(
     # recompute per materialization job — doubly so with fused rounds.
     if checkpoint_every < 1:
         raise ValueError(f"checkpoint_every must be >= 1, got {checkpoint_every}")
-    _ck = lineage_truncator(nodes.sparkSession, checkpoint_dir)
-    nodes = nodes.transform(_ck)
+    nodes = pin(nodes)
     n = nodes.count()
     if n == 0:
         raise ValueError("pagerank needs at least one node")
@@ -105,7 +100,7 @@ def pagerank(
     # every iteration's contribution join; for a derived edge set
     # (e.g. the co-purchase basket expansion + distinct) one checkpoint
     # bounds the dominant build cost to exactly one execution.
-    edges = edges.transform(_ck)
+    edges = pin(edges)
     # Node-sized out-degree relation, pinned once. The per-edge
     # contribution (85*pr) div (100*deg) depends only on the SOURCE
     # node, so it is computed per source on this relation and joined
@@ -114,10 +109,10 @@ def pagerank(
     # shape pinned up front (measured r12: out_e checkpoint alone was
     # ~2.1s of gr1's 5.3s at sf0.1). Value-identical: same integer
     # division, evaluated once per src instead of once per edge.
-    deg = edges.groupBy("src").agg(F.count("*").alias("deg")).transform(_ck)
+    deg = edges.groupBy("src").agg(F.count("*").alias("deg")).transform(pin)
     pr = nodes.select(
         F.col(id_col), F.lit(PR_SCALE // n).cast("long").alias("pr")
-    ).transform(_ck)
+    ).transform(pin)
     if broadcast_ranks is None:
         broadcast_ranks = n <= BROADCAST_NODE_LIMIT
     for it in range(iterations):
@@ -138,7 +133,7 @@ def pagerank(
             (F.lit(base) + F.coalesce(F.col("s"), F.lit(0))).cast("long").alias("pr"),
         )
         if (it + 1) % checkpoint_every == 0 or it == iterations - 1:
-            pr = pr.transform(_ck)
+            pr = pin(pr)
     return pr
 
 
@@ -171,7 +166,7 @@ def triangle_count(edges: DataFrame) -> DataFrame:
         # once as the annotate probe); without this a caller-derived
         # edge set (gr2's basket expansion + weight filter) executes
         # per reference.
-        .localCheckpoint()
+        .transform(pin)
     )
     deg = (
         e0.select(F.col("a").alias("id"))
@@ -222,7 +217,6 @@ def connected_components(
     edges: DataFrame,
     id_col: str = "id",
     max_iterations: int = 20,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Weakly-connected components: every node in ``nodes`` gets a
     ``component_id`` = the smallest LISTED node id reachable through
@@ -254,7 +248,6 @@ def connected_components(
         pairs,
         "doc_id",
         max_iterations,
-        checkpoint_dir,
     )
     return labels.select(
         F.col("doc_id").alias(id_col),
@@ -271,7 +264,6 @@ def label_propagation(
     edges: DataFrame,
     id_col: str = "id",
     iterations: int = 2,
-    checkpoint_dir: str | None = None,
     broadcast_ranks: bool | None = None,
 ) -> DataFrame:
     """Synchronous label-propagation community detection (LPA,
@@ -290,7 +282,7 @@ def label_propagation(
     Pregel cost model, same as :func:`pagerank`: per round ONE
     edge-keyed join (neighbor label lookup) + one (node, label) count
     + one per-node argmax — all map-side combinable — with lineage
-    truncated by ``localCheckpoint`` so the plan never grows with the
+    truncated by ``pin`` so the plan never grows with the
     round count. Edges must list both orientations (symmetric input,
     as the co-purchase builder emits); the argmax is min over a
     (-count, label) struct, an integer-exact total order — no floats
@@ -300,9 +292,8 @@ def label_propagation(
         raise ValueError(f"iterations must be >= 1: {iterations}")
     # Pin the (possibly expensive) caller-derived relations: each is
     # read once per round.
-    _ck = lineage_truncator(nodes.sparkSession, checkpoint_dir)
-    edges = edges.select("src", "dst").transform(_ck)
-    nodes = nodes.select(F.col(id_col)).transform(_ck)
+    edges = edges.select("src", "dst").transform(pin)
+    nodes = nodes.select(F.col(id_col)).transform(pin)
     labels = nodes.select(F.col(id_col), F.col(id_col).alias("label"))
     if broadcast_ranks is None:
         broadcast_ranks = nodes.count() <= BROADCAST_NODE_LIMIT
@@ -331,7 +322,7 @@ def label_propagation(
                 F.col(id_col),
                 F.coalesce("_new", "label").alias("label"),
             )
-            .transform(_ck)
+            .transform(pin)
         )
     from pyspark.sql.window import Window
 
@@ -354,7 +345,6 @@ def bfs_levels(
     sources: DataFrame,
     id_col: str = "id",
     max_hops: int = 3,
-    checkpoint_dir: str | None = None,
     broadcast_ranks: bool | None = None,
 ) -> DataFrame:
     """Multi-source BFS: per node, the hop distance to the nearest
@@ -371,8 +361,7 @@ def bfs_levels(
     relaxing settled nodes is a no-op the aggregate absorbs. Integer
     distances end-to-end; the unreachable sentinel stays internal
     (NULL leaves the operator)."""
-    _ck = lineage_truncator(nodes.sparkSession, checkpoint_dir)
-    edges = edges.select("src", "dst").transform(_ck)
+    edges = edges.select("src", "dst").transform(pin)
     dist = (
         nodes.select(F.col(id_col))
         .join(
@@ -381,7 +370,7 @@ def bfs_levels(
             "left",
         )
         .select(F.col(id_col), F.col("_d").cast("long").alias("dist"))
-        .transform(_ck)
+        .transform(pin)
     )
     if broadcast_ranks is None:
         broadcast_ranks = dist.count() <= BROADCAST_NODE_LIMIT
@@ -411,7 +400,7 @@ def bfs_levels(
                     F.lit(_BFS_INF),
                 ).alias("dist"),
             )
-            .transform(_ck)
+            .transform(pin)
         )
     return dist
 
@@ -422,7 +411,6 @@ def kcore(
     id_col: str = "id",
     k: int = 3,
     rounds: int = 3,
-    checkpoint_dir: str | None = None,
     broadcast_ranks: bool | None = None,
 ) -> DataFrame:
     """Synchronous k-core peeling (Seidman 1983 cores; the parallel
@@ -439,16 +427,15 @@ def kcore(
     Same Pregel cost model as :func:`label_propagation`: per round two
     semi-joins of the pinned edge list against the alive set + one
     src-keyed count — map-side combinable, no floats, lineage
-    truncated per round with ``localCheckpoint`` so the plan is
+    truncated per round with ``pin`` so the plan is
     round-count-independent. Edges must list both orientations
     (symmetric input, as the co-purchase builder emits); degree is
     out-degree over the symmetric list = undirected degree.
     """
     if k < 1 or rounds < 1:
         raise ValueError(f"k and rounds must be >= 1: k={k} rounds={rounds}")
-    _ck = lineage_truncator(nodes.sparkSession, checkpoint_dir)
-    edges = edges.select("src", "dst").transform(_ck)
-    alive = nodes.select(F.col(id_col)).transform(_ck)
+    edges = edges.select("src", "dst").transform(pin)
+    alive = nodes.select(F.col(id_col)).transform(pin)
     if broadcast_ranks is None:
         broadcast_ranks = alive.count() <= BROADCAST_NODE_LIMIT
     deg = None
@@ -468,7 +455,7 @@ def kcore(
         alive = (
             deg.filter(F.col("deg") >= k)
             .select(F.col("src").alias(id_col), F.col("deg"))
-            .transform(_ck)
+            .transform(pin)
         )
     return alive.select(F.col(id_col), F.col("deg").cast("long").alias("core_degree"))
 
@@ -480,7 +467,6 @@ def personalized_pagerank(
     id_col: str = "id",
     iterations: int = 10,
     checkpoint_every: int = 2,
-    checkpoint_dir: str | None = None,
     broadcast_ranks: bool | None = None,
 ) -> DataFrame:
     """Personalized PageRank (random walk with restart to a SEED set
@@ -499,9 +485,8 @@ def personalized_pagerank(
     """
     if checkpoint_every < 1:
         raise ValueError(f"checkpoint_every must be >= 1, got {checkpoint_every}")
-    _ck = lineage_truncator(nodes.sparkSession, checkpoint_dir)
-    nodes = nodes.transform(_ck)
-    seeds = seeds.select(F.col(id_col)).distinct().transform(_ck)
+    nodes = pin(nodes)
+    seeds = seeds.select(F.col(id_col)).distinct().transform(pin)
     ns = seeds.count()
     if ns == 0:
         raise ValueError("personalized_pagerank needs at least one seed")
@@ -510,17 +495,17 @@ def personalized_pagerank(
         seeds.withColumn("_seed", F.lit(1)), id_col, "left"
     ).select(
         F.col(id_col), F.coalesce("_seed", F.lit(0)).alias("_seed")
-    ).transform(_ck)
-    edges = edges.transform(_ck)
+    ).transform(pin)
+    edges = pin(edges)
     # Same degree-factored contribution as pagerank(): the per-edge
     # term depends only on src, so it is computed on the node-sized
     # deg relation and joined onto the raw edge list — no edge-sized
     # out_e materialization.
-    deg = edges.groupBy("src").agg(F.count("*").alias("deg")).transform(_ck)
+    deg = edges.groupBy("src").agg(F.count("*").alias("deg")).transform(pin)
     pr = marked.select(
         F.col(id_col),
         (F.col("_seed") * F.lit(PR_SCALE // ns)).cast("long").alias("pr"),
-    ).transform(_ck)
+    ).transform(pin)
     if broadcast_ranks is None:
         # marked is node-sized; same auto rule as pagerank.
         broadcast_ranks = marked.count() <= BROADCAST_NODE_LIMIT
@@ -547,7 +532,7 @@ def personalized_pagerank(
             .alias("pr"),
         )
         if (it + 1) % checkpoint_every == 0 or it == iterations - 1:
-            pr = pr.transform(_ck)
+            pr = pin(pr)
     return pr
 
 
@@ -592,7 +577,7 @@ def link_prediction_ra(
         .distinct()
         # referenced three times below (two union legs + anti-join);
         # pin so a caller-derived edge set executes once.
-        .localCheckpoint()
+        .transform(pin)
     )
     und = e0.select(F.col("a").alias("src"), F.col("b").alias("dst")).unionByName(
         e0.select(F.col("b").alias("src"), F.col("a").alias("dst"))
@@ -657,7 +642,7 @@ def modularity(
         )
         .filter(F.col("a") != F.col("b"))
         .distinct()
-        .localCheckpoint()  # read by the m count and the intra join
+        .transform(pin)  # read by the m count and the intra join
     )
     mm = und.agg(F.count("*").cast("long").alias("m"))
     la = lab.withColumnsRenamed({"_id": "a", "_c": "ca"})

@@ -1,52 +1,41 @@
-"""Lineage truncation policy for iterative operators (PageRank, LPA,
-BFS, k-core, pointer-doubling CC, k-means).
+"""The one lineage cut of the package: :func:`pin`.
 
 Iterative Spark grows the logical plan every round; without
 truncation, planning cost and recompute-on-failure spans grow with the
-round count (the classic iterative-Spark trap). Two truncation modes:
+round count (the classic iterative-Spark trap). Every operator that
+cuts lineage — the iterative ops (PageRank, LPA, BFS, k-core,
+pointer-doubling CC, k-means, nn_descent) and every relation pinned
+before several consumers — goes through ``pin``, so durability is one
+switch, and it is Spark's own: the context's reliable checkpoint
+directory (``spark.checkpoint.dir`` at context start, or
+``SparkContext.setCheckpointDir``).
 
-* ``localCheckpoint()`` (default, ``checkpoint_dir=None``):
-  materializes to EXECUTOR-LOCAL block storage. Fastest (~30% at the
-  bench graph vs reliable checkpointing — no DFS write), right for
-  local[) runs and short jobs. The blocks die with their executor:
-  on a real multi-executor cluster, ONE lost executor mid-iteration
-  fails the whole job unrecoverably, because the truncated lineage
-  cannot recompute the lost partitions.
-* ``checkpoint()`` (``checkpoint_dir`` set): writes to the RELIABLE
-  checkpoint directory — shared storage (HDFS / object store) on a
-  real cluster — and survives executor loss; lost partitions re-read
-  from the checkpoint files. The right mode for multi-hour iterative
-  jobs at 100 TB, where the probability of losing at least one of
-  1000 executors mid-job is ~certain.
+* unset (default): ``localCheckpoint()`` materializes to
+  EXECUTOR-LOCAL block storage. Fastest (no DFS write), right for
+  ``local[*]`` runs and short jobs. The blocks die with their
+  executor: on a multi-executor cluster ONE lost executor fails the
+  job, because the truncated lineage cannot recompute the lost
+  partitions.
+* set: ``checkpoint()`` writes to the reliable directory — shared
+  storage (HDFS / object store) on a real cluster — and survives
+  executor loss; lost partitions re-read from the checkpoint files.
 
 Results are IDENTICAL under either mode (truncation never changes
-values, only where the materialized blocks live); the choice is purely
-a durability/latency trade, which is why it's a knob and not a fork.
+values, only where the materialized blocks live). No query path sets
+the directory: it belongs to whoever owns the context.
 """
 
 from __future__ import annotations
 
-from typing import Callable
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
-def lineage_truncator(
-    spark: SparkSession, checkpoint_dir: str | None
-) -> Callable[[DataFrame], DataFrame]:
-    """Return the per-round truncation function: ``df.localCheckpoint``
-    when ``checkpoint_dir`` is None, else reliable ``df.checkpoint``
-    with the SparkContext's checkpoint dir pointed at
-    ``checkpoint_dir`` (idempotent; pass a shared-storage URI on a
-    real cluster — an executor-invisible driver-local path would fail
-    the first reliable checkpoint, loudly)."""
-    if checkpoint_dir is None:
-        return lambda df: df.localCheckpoint()
-    sc = spark.sparkContext
-    # setCheckpointDir appends a fresh UUID subdir each call, so
-    # getCheckpointDir never equals the caller's path — remember what
-    # we last set on the context itself to keep re-entry idempotent.
-    if getattr(sc, "_kfs_checkpoint_dir", None) != checkpoint_dir:
-        sc.setCheckpointDir(checkpoint_dir)
-        sc._kfs_checkpoint_dir = checkpoint_dir
-    return lambda df: df.checkpoint()
+def pin(df: DataFrame) -> DataFrame:
+    """Eagerly materialize ``df`` and cut its lineage: reliable
+    ``checkpoint()`` when the SparkContext has a checkpoint directory,
+    else ``localCheckpoint()`` (always so on Spark Connect, whose
+    sessions expose no SparkContext)."""
+    sc = getattr(df.sparkSession, "sparkContext", None)
+    if sc is not None and sc.getCheckpointDir() is not None:
+        return df.checkpoint()
+    return df.localCheckpoint()

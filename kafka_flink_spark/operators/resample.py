@@ -33,6 +33,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from kafka_flink_spark.operators.iterative import pin
+
 _PRESENT = "_gapfill_present"
 
 
@@ -71,7 +73,7 @@ def gap_fill(
     # 100 TB, the raw-table scan + aggregation — executes twice. The
     # relation is result-sized (one row per key×bucket), so pinning it
     # is cheap and bounds the expensive upstream to exactly one run.
-    aggregated = aggregated.localCheckpoint()
+    aggregated = pin(aggregated)
     marked = aggregated.withColumn(_PRESENT, F.lit(True))
     filled = time_grid(aggregated, keys, ts_col, step).join(
         marked, on=[*keys, ts_col], how="left"

@@ -25,6 +25,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from kafka_flink_spark.operators.iterative import pin
+
 EMBED_DIM = 64
 NUM_PLANES = 8
 
@@ -1177,7 +1179,6 @@ def nn_descent(
     rounds: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """NN-descent k-NN-graph refinement (Dong, Moses & Li, WWW 2011),
     made deterministic: initialize each node ``u`` with ``k``
@@ -1208,15 +1209,12 @@ def nn_descent(
     one vector-lookup join per pair side, one WindowGroupLimit top-k.
     Vectors travel only to score candidate pairs — n·k² rows of two
     ids, never a corpus-wide vector shuffle. Lineage truncated per
-    round (operators/iterative.py knob).
+    round (``operators.iterative.pin``).
     """
     from pyspark.sql.window import Window
 
-    from kafka_flink_spark.operators.iterative import lineage_truncator
-
     if k < 1 or rounds < 1:
         raise ValueError(f"k and rounds must be >= 1: k={k} rounds={rounds}")
-    _ck = lineage_truncator(df.sparkSession, checkpoint_dir)
     # The norm rides the pinned vector relation: computed ONCE per
     # vector at materialization instead of once per scored pair
     # (cosine_pre — value-identical; the scoring joins are the
@@ -1224,7 +1222,7 @@ def nn_descent(
     base_v = _as_double(vec_col)
     vecs = df.select(
         F.col(id_col).alias("vid"), base_v.alias("v"), norm(base_v).alias("nv")
-    ).transform(_ck)
+    ).transform(pin)
     n = vecs.count()
     va = vecs.select(
         F.col("vid").alias("_ida"), F.col("v").alias("_va"), F.col("nv").alias("_na")
@@ -1284,14 +1282,14 @@ def nn_descent(
     # directed scored graph: (u, w, c). Pin the scored canonical pairs
     # before expanding: both direction legs read them, and without the
     # checkpoint the scoring join executes once per leg.
-    init_scored = score(init_pairs).transform(_ck)
+    init_scored = pin(score(init_pairs))
     g = (
         init_scored.select(F.col("a").alias("u"), F.col("b").alias("w"), "c")
         .unionByName(
             init_scored.select(F.col("b").alias("u"), F.col("a").alias("w"), "c")
         )
         .join(ring, ["u", "w"], "left_semi")
-        .transform(_ck)
+        .transform(pin)
     )
     topw = Window.partitionBy("u").orderBy(F.desc("c"), F.asc("w"))
     # Running set of canonical pairs that BOTH endpoints have already
@@ -1325,7 +1323,7 @@ def nn_descent(
             .distinct()
         )
         fresh = cands.join(seen, ["a", "b"], "left_anti")
-        scored = score(fresh).transform(_ck)  # read by both direction legs
+        scored = pin(score(fresh))  # read by both direction legs
         # Dedup vs g via an anti-join on the node-sized g (broadcastable)
         # instead of dropDuplicates over the unioned edge relation — the
         # widest shuffle of the round. Colliding rows carry the same c
@@ -1343,7 +1341,7 @@ def nn_descent(
             directed.withColumn("rn", F.row_number().over(topw))
             .filter(F.col("rn") <= k)
             .select("u", "w", "c")
-            .transform(_ck)
+            .transform(pin)
         )
         seen = seen.unionByName(scored.select("a", "b"))
     return (
@@ -1419,7 +1417,7 @@ def graph_ann_search(
     # is index-sized (n x k_graph id pairs), never vectors.
     edges = g.select(
         F.col("query_id").alias("src"), F.col("neighbor_id").alias("dst")
-    ).localCheckpoint()
+    ).transform(pin)
     qv = base.filter(F.col("nid").isin(*query_ids)).select(
         F.col("nid").alias("query_id"), F.col("v").alias("qv"), F.col("nv").alias("qn")
     )
@@ -1473,7 +1471,7 @@ def graph_ann_search(
     # Exchanges), so analysis + codegen cost grows exponentially in
     # the round count. Each checkpoint is beam/visited-sized (ids +
     # one double per row), never vectors; values are unchanged.
-    visited = scored(entry).localCheckpoint()
+    visited = pin(scored(entry))
     w = Window.partitionBy("query_id").orderBy(F.desc("cs"), F.asc("node"))
     for _ in range(rounds):
         expanded = (
@@ -1482,7 +1480,7 @@ def graph_ann_search(
             .unionByName(frontier.select("query_id", "node"))
             .filter(F.col("node") != F.col("query_id"))
         )
-        sc = scored(expanded).localCheckpoint()
+        sc = pin(scored(expanded))
         frontier = (
             sc.withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") <= beam)

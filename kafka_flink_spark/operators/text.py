@@ -18,6 +18,8 @@ import pandas as pd  # module-level: pandas_udf type hints resolve via globals
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from kafka_flink_spark.operators.iterative import pin
+
 # Tiny per-language function-word profiles for the n-gram/stopword
 # language-ID heuristic. Deterministic, oracle-reproducible.
 LANG_PROFILES: dict[str, tuple[str, ...]] = {
@@ -1065,7 +1067,7 @@ def boilerplate_spans(
     # pin it once (the round-5 multi-consumer convention). The group
     # key rides through the helper — no join to re-attach it.
     _, wins = _token_window_hashes(df, k, col, id_col, carry_cols=(group_col,))
-    wins = wins.localCheckpoint()
+    wins = pin(wins)
 
     group_sizes = base.groupBy(group_col).agg(
         F.countDistinct(id_col).alias("_n_docs")
@@ -1262,7 +1264,7 @@ def bpe_train(
     Zero driver-side collect: the winning pair stays a 1-row DataFrame,
     broadcast-joined onto the vocabulary so the fold reads the rule
     from columns; the returned merge table is the union of the per-
-    round winners. Lineage is cut per round with localCheckpoint on
+    round winners. Lineage is cut per round with ``pin`` on
     the (small) vocabulary relation.
 
     Returns one row per learned merge: merge_rank, left, right,
@@ -1285,7 +1287,7 @@ def _bpe_loop(df: DataFrame, num_merges: int, col: str):
         .groupBy("w")
         .agg(F.count("*").alias("freq"))
         .select(chars.alias("syms"), "freq")
-        .localCheckpoint(eager=True)
+        .transform(pin)
     )
 
     winners = []
@@ -1308,7 +1310,7 @@ def _bpe_loop(df: DataFrame, num_merges: int, col: str):
             .orderBy(F.desc("_cnt"), "_l", "_r")
             .limit(1)
             .withColumn("_m", F.concat("_l", "_r"))
-            .localCheckpoint(eager=True)
+            .transform(pin)
         )
         winners.append(
             top.select(
@@ -1334,7 +1336,7 @@ def _bpe_loop(df: DataFrame, num_merges: int, col: str):
         vocab = (
             vocab.join(F.broadcast(top), F.lit(True), "left")
             .select(merged_syms.alias("syms"), "freq")
-            .localCheckpoint(eager=True)
+            .transform(pin)
         )
 
     return reduce(DataFrame.unionByName, winners), vocab

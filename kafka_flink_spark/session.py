@@ -61,9 +61,16 @@ if os.environ.get("SPARK_GRAFT_STATESTORE") == "rocksdb":
 
 
 def apply_runtime_conf(spark: SparkSession) -> SparkSession:
-    """Apply engine runtime confs to an existing session (idempotent)."""
+    """Apply engine runtime confs to an existing session (idempotent).
+
+    ``spark.sql.shuffle.partitions`` is only filled in where the session
+    has none set, so a count its owner chose (e.g. through
+    ``get_session(shuffle_partitions=N)``) survives every registry query.
+    """
     for k, v in RUNTIME_CONF.items():
         try:
+            if k == "spark.sql.shuffle.partitions" and spark.conf.get(k, None):
+                continue
             spark.conf.set(k, v)
         except Exception:
             # Non-mutable conf on this build — keep the session usable.
@@ -142,24 +149,25 @@ def get_session(
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (falling back to
     ``local[*]``) so the same entry point works for tests and bench.
+    ``shuffle_partitions`` resolves as: the argument, else
+    ``$SPARK_GRAFT_SHUFFLE`` (the ``RUNTIME_CONF`` value), else 32.
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS")
         master = f"local[{cpus}]" if cpus else "local[*]"
-    if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
 
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )
     for k, v in RUNTIME_CONF.items():
         builder = builder.config(k, v)
-    spark = builder.getOrCreate()
-    return apply_runtime_conf(spark)
+    spark = apply_runtime_conf(builder.getOrCreate())
+    if shuffle_partitions is not None:
+        spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
+    return spark
 
 
 def cluster_conf(

@@ -44,7 +44,9 @@ from __future__ import annotations
 
 import json
 import os
+import sys
 
+from pyspark import cloudpickle
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
@@ -262,7 +264,10 @@ class KafkaLogStreamReader(DataSourceStreamReader):
 
 
 def register_kafka_log(spark) -> None:
-    """Idempotently register the source with a session."""
+    """Idempotently register the source with a session. The module is
+    pickled by value: Spark's Python data-source runners do not see
+    ``addPyFile`` zips, so a by-reference pickle fails outside the repo."""
+    cloudpickle.register_pickle_by_value(sys.modules[__name__])
     try:
         spark.dataSource.register(KafkaLogDataSource)
     except Exception:

@@ -17,6 +17,9 @@ from the same public recipe (see suite/rich_udf_queries).
 
 from __future__ import annotations
 
+import sys
+
+from pyspark import cloudpickle
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
@@ -98,7 +101,10 @@ class TradeGenReader(DataSourceReader):
 
 
 def register_trade_gen(spark) -> None:
-    """Idempotently register the source with a session."""
+    """Idempotently register the source with a session. The module is
+    pickled by value: Spark's Python data-source runners do not see
+    ``addPyFile`` zips, so a by-reference pickle fails outside the repo."""
+    cloudpickle.register_pickle_by_value(sys.modules[__name__])
     try:
         spark.dataSource.register(TradeGenDataSource)
     except Exception:

@@ -9,6 +9,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from kafka_flink_spark.operators.iterative import pin
 from kafka_flink_spark.sources.fixtures import TRADES_ORACLE_CTE, load_table, trades_view
 from kafka_flink_spark.sources.kafka_io import encode_json_envelope
 from kafka_flink_spark.suite import register
@@ -1006,11 +1007,11 @@ def io19_incremental_join_maintenance(spark: SparkSession, sf_dir: str) -> DataF
                 ((F.col("o_orderkey") % 10) < 8) & (F.col("o_orderkey") % 7 == 0)
             ).withColumn("price_cents", F.col("price_cents") + 1000)
         )
-        .localCheckpoint()
+        .transform(pin)
     )
     c_delta = c_all.filter(F.col("c_custkey") % 5 == 0).withColumn(
         "segment", F.lower("segment")
-    ).localCheckpoint()
+    ).transform(pin)
 
     # The previously materialized view: in production this is a table
     # on disk; here J0 is built once and PINNED — the maintenance path
@@ -1018,7 +1019,7 @@ def io19_incremental_join_maintenance(spark: SparkSession, sf_dir: str) -> DataF
     j0 = (
         o_base.join(c_all, o_base.o_custkey == c_all.c_custkey)
         .select("o_orderkey", "o_custkey", "segment", "price_cents")
-        .localCheckpoint()
+        .transform(pin)
     )
 
     # post-delta table states (delta-sized constructions)

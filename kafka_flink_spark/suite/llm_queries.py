@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 from kafka_flink_spark.operators import dedup as D
 from kafka_flink_spark.operators import similarity as S
 from kafka_flink_spark.operators import text as X
+from kafka_flink_spark.operators.iterative import pin
 from kafka_flink_spark.sources.fixtures import load_table
 from kafka_flink_spark.suite import register
 
@@ -3476,7 +3477,7 @@ SELECT CAST((SELECT count(*) FROM truth) AS BIGINT) AS n_true,
     "x 2 rows — the eval measures the real figure on the corpus, "
     "the number a production dedup rollout needs before trusting "
     "the approximate path. Both pair relations are pinned "
-    "(localCheckpoint) before their two consumers (count + "
+    "(pin) before their two consumers (count + "
     "intersection), the three scalar counts crossJoin broadcast-"
     "style, and every stage inherits the verified scale shapes of "
     "d2/d3 themselves.",
@@ -3486,12 +3487,12 @@ def d10_lsh_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     truth = (
         D.ngram_jaccard_pairs(docs, min_jaccard=0.5)
         .select("doc_a", "doc_b")
-        .localCheckpoint()
+        .transform(pin)
     )
     lsh = (
         D.minhash_lsh_pairs(docs, min_jaccard=0.5, bucket_cap=None)
         .select("doc_a", "doc_b")
-        .localCheckpoint()
+        .transform(pin)
     )
     hit = lsh.join(truth, ["doc_a", "doc_b"], "left_semi")
     nt = truth.agg(F.count("*").cast("long").alias("n_true"))
@@ -4066,7 +4067,7 @@ def pipe9_entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
             "p_name",
             md5_long(F.concat_ws("|", "p_brand", "p_name")).alias("nid"),
         )
-        .localCheckpoint()  # three consumers: two join legs + label map
+        .transform(pin)  # three consumers: two join legs + label map
     )
     a, b = names.alias("a"), names.alias("b")
     edges = (

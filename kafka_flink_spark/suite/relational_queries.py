@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from kafka_flink_spark.operators.iterative import pin
 from kafka_flink_spark.sources.fixtures import load_table
 from kafka_flink_spark.suite import register
 
@@ -2104,7 +2105,7 @@ SELECT id AS part_id, pr AS pr_e12 FROM pr{iters}
     "engine, so an iterative float algorithm becomes fully "
     "oracle-checkable (unrolled-SQL oracle). Pregel cost model: one "
     "edges-ranks join + one aggregation per round, lineage truncated "
-    "per round with localCheckpoint.",
+    "per round with pin.",
 )
 def gr1_pagerank_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kafka_flink_spark.operators.graph import pagerank
@@ -2112,7 +2113,7 @@ def gr1_pagerank_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     # Edge build via per-order basket expansion (_copurchase_edges:
     # same pair set as the orderkey self-join, no fact-table
-    # self-join). pagerank localCheckpoints the edge relation before
+    # self-join). pagerank pins the edge relation before
     # deriving degrees, so the build + distinct executes exactly once
     # regardless of how many downstream consumers read it.
     edges = _copurchase_edges(li)
@@ -3318,7 +3319,7 @@ SELECT id AS part_id, pr AS ppr_e12 FROM pr{iters}
     "integer fixed-point recurrence with teleport mass confined to "
     "seeds via a 0/1 integer flag — every round stays pure integer "
     "arithmetic, so the 5-iteration unrolled-SQL oracle matches "
-    "bit-for-bit. Same Pregel cost model and localCheckpoint lineage "
+    "bit-for-bit. Same Pregel cost model and pin lineage "
     "control; completes the graph family: ranking global (gr1) and "
     "seeded (gr7), motifs (gr2), connectivity (gr3), communities "
     "(gr4), paths (gr5), cores (gr6).",
@@ -3739,7 +3740,7 @@ def gr9_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     # basket-expansion edge build (_copurchase_edges: same pair set
     # as the orderkey self-join, no fact-table self-join)
-    edges = _copurchase_edges(li).localCheckpoint()  # read by LPA + modularity
+    edges = pin(_copurchase_edges(li))  # read by LPA + modularity
     nodes = li.select(F.col("l_partkey").alias("id")).distinct()
     lp = label_propagation(nodes, edges, "id", iterations=2)
     labels = lp.select("id", F.col("community_id").alias("label"))

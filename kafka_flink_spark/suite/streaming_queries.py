@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kafka_flink_spark.operators.iterative import pin
 from kafka_flink_spark.sources.fixtures import TRADES_ORACLE_CTE, scratch_dir, trades_view
 from kafka_flink_spark.streaming.candles_stream import (
     ohlcv_stream,
@@ -1948,7 +1949,7 @@ def _w36_per_query_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         cscore.withColumn("arn", F.row_number().over(wa))
         .filter(F.col("arn") == 1)
         .select("neighbor_id", "cv", F.col("cid").alias("cell"))
-        .localCheckpoint()
+        .transform(pin)
     )
     cent_row = cents.agg(
         F.sort_array(F.collect_list(F.struct("cid", "centroid"))).alias("_cents")

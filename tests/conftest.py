@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 import duckdb
 import pytest
 
@@ -14,6 +16,28 @@ SF_MED = "/root/testdata/sf0.01"
 def spark():
     spark = get_session("kafka_flink_spark-tests", shuffle_partitions=8)
     yield spark
+
+
+@pytest.fixture
+def reliable_checkpoints(spark, tmp_path):
+    """Context manager factory: inside ``with reliable_checkpoints():``
+    the SparkContext has a reliable checkpoint directory under
+    ``tmp_path`` (yielded), so every ``pin`` writes reliable
+    checkpoints; on exit the context's previous directory (normally
+    none) is restored."""
+    jsc = spark.sparkContext._jsc.sc()
+
+    @contextmanager
+    def on():
+        saved = jsc.checkpointDir()  # scala Option[String]
+        ckdir = str(tmp_path / "reliable_ck")
+        spark.sparkContext.setCheckpointDir(ckdir)
+        try:
+            yield ckdir
+        finally:
+            getattr(jsc, "checkpointDir_$eq")(saved)
+
+    return on
 
 
 @pytest.fixture(scope="session")

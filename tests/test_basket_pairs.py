@@ -17,9 +17,11 @@ from kafka_flink_spark.suite.relational_queries import (
 )
 
 # (l_orderkey, l_partkey): duplicate partkeys within an order (order 1
-# has part 10 twice -> self-pairs of the two OCCURRENCES must appear,
-# pair weight counts line-level co-occurrence), a singleton basket
-# (order 3), and a NULL partkey (order 2) that every variant drops.
+# has part 10 twice: the pair of its two equal-value OCCURRENCES is
+# excluded, while the distinct-value pair (10, 11) appears with weight
+# 2 — pair weights count line-level occurrence multiplicity), a
+# singleton basket (order 3), and a NULL partkey (order 2) that every
+# variant drops.
 ROWS = [
     (1, 10),
     (1, 10),

@@ -38,3 +38,73 @@ def test_cluster_conf_scales_with_shape():
     assert "RocksDBStateStoreProvider" in c["spark.sql.streaming.stateStore.providerClass"]
     # runtime confs ride along so a deploy gets the same semantics
     assert c["spark.sql.session.timeZone"] == "UTC"
+
+
+def test_get_session_shuffle_partitions_argument_wins(spark):
+    """An explicit ``shuffle_partitions`` beats the ``RUNTIME_CONF``
+    (env / default) value, and keeps beating it after a registry query
+    (whose wrapper re-applies ``RUNTIME_CONF``)."""
+    from kafka_flink_spark.session import get_session
+    from kafka_flink_spark.suite import spark_queries
+    from tests.conftest import SF_SMALL
+
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    try:
+        session = get_session(shuffle_partitions=5)
+        assert session.conf.get(key) == "5"
+        spark_queries()["a1_ohlcv_tumbling_1h"](session, SF_SMALL).count()
+        assert session.conf.get(key) == "5"
+    finally:
+        spark.conf.set(key, before)
+    assert spark.conf.get(key) == before
+
+
+def test_one_way_to_pin():
+    """Every lineage cut in the package goes through
+    ``operators.iterative.pin``: no other code calls
+    ``localCheckpoint``, ``checkpoint`` or ``setCheckpointDir`` (the
+    checkpoint directory belongs to whoever owns the context)."""
+    import ast
+    import pathlib
+
+    import kafka_flink_spark
+
+    banned = {"localCheckpoint", "checkpoint", "setCheckpointDir"}
+    root = pathlib.Path(kafka_flink_spark.__file__).parent
+    offenders = []
+    for path in sorted(root.rglob("*.py")):
+        tree = ast.parse(path.read_text(), str(path))
+        allowed = set()
+        if path.relative_to(root).as_posix() == "operators/iterative.py":
+            pin = next(
+                n for n in tree.body if isinstance(n, ast.FunctionDef) and n.name == "pin"
+            )
+            allowed = {id(n) for n in ast.walk(pin)}
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Attribute)
+                and node.attr in banned
+                and id(node) not in allowed
+            ):
+                offenders.append(f"{path.relative_to(root)}:{node.lineno} .{node.attr}")
+    assert not offenders, offenders
+
+
+def test_pin_without_spark_context_cuts_locally():
+    """A Spark Connect session has no ``sparkContext`` attribute; ``pin``
+    then takes the local cut instead of raising."""
+    from types import SimpleNamespace
+
+    from kafka_flink_spark.operators.iterative import pin
+
+    class ConnectLikeSession:
+        def __getattr__(self, name):
+            raise AttributeError(name)
+
+    df = SimpleNamespace(
+        sparkSession=ConnectLikeSession(),
+        localCheckpoint=lambda: "local",
+        checkpoint=lambda: "reliable",
+    )
+    assert pin(df) == "local"

@@ -293,15 +293,15 @@ def test_link_prediction_hub_cap_drops_apex(spark):
     assert (1, 4) not in got and (3, 4) not in got
 
 
-def test_reliable_checkpoint_knob_identical_results(spark, tmp_path):
-    """The durable-checkpoint knob (VERDICT r6 task 4): with
-    checkpoint_dir set, every iterative op truncates lineage via
-    reliable checkpoint() (survives executor loss on a real cluster)
-    instead of localCheckpoint (executor-local blocks, lost with the
-    executor) — and the results are IDENTICAL, because truncation
-    never changes values, only where materialized blocks live.
-    Checkpoint files actually land in the directory (the knob is
-    exercised, not silently ignored)."""
+def test_reliable_checkpoint_knob_identical_results(spark, reliable_checkpoints):
+    """The durability switch: with a reliable checkpoint directory on
+    the context, every iterative op truncates lineage via reliable
+    checkpoint() (survives executor loss on a real cluster) instead of
+    localCheckpoint (executor-local blocks, lost with the executor) —
+    and the results are IDENTICAL, because truncation never changes
+    values, only where materialized blocks live. Checkpoint files
+    actually land in the directory (the switch is exercised, not
+    silently ignored)."""
     import os
 
     from kafka_flink_spark.operators.clustering import kmeans_fit
@@ -313,7 +313,6 @@ def test_reliable_checkpoint_knob_identical_results(spark, tmp_path):
         personalized_pagerank,
     )
 
-    ckdir = str(tmp_path / "reliable_ck")
     edges = [(0, 1), (0, 2), (1, 2), (2, 0), (3, 2), (2, 3), (4, 5), (5, 4)]
     nodes_df = spark.createDataFrame([(i,) for i in range(6)], "id long")
     edges_df = spark.createDataFrame(edges, "src long, dst long")
@@ -321,36 +320,33 @@ def test_reliable_checkpoint_knob_identical_results(spark, tmp_path):
         edges_df.selectExpr("dst as src", "src as dst")
     ).distinct()
     seeds = spark.createDataFrame([(0,)], "id long")
+    vecs = spark.createDataFrame(
+        [(i, [float(i % 4), float(i % 7)]) for i in range(24)],
+        "vec_id long, embedding array<double>",
+    )
 
     def rows(df):
         return sorted(map(tuple, df.collect()))
 
     runs = [
-        lambda ck: pagerank(nodes_df, edges_df, "id", iterations=5, checkpoint_dir=ck),
-        lambda ck: personalized_pagerank(
-            nodes_df, edges_df, seeds, "id", iterations=5, checkpoint_dir=ck
-        ),
-        lambda ck: label_propagation(nodes_df, sym, "id", iterations=3, checkpoint_dir=ck),
-        lambda ck: bfs_levels(nodes_df, sym, seeds, "id", max_hops=3, checkpoint_dir=ck),
-        lambda ck: kcore(nodes_df, sym, "id", k=2, rounds=3, checkpoint_dir=ck),
-        lambda ck: connected_components(nodes_df, edges_df, "id", checkpoint_dir=ck),
+        lambda: pagerank(nodes_df, edges_df, "id", iterations=5),
+        lambda: personalized_pagerank(nodes_df, edges_df, seeds, "id", iterations=5),
+        lambda: label_propagation(nodes_df, sym, "id", iterations=3),
+        lambda: bfs_levels(nodes_df, sym, seeds, "id", max_hops=3),
+        lambda: kcore(nodes_df, sym, "id", k=2, rounds=3),
+        lambda: connected_components(nodes_df, edges_df, "id"),
+        # iterations >= 4 so _fit's every-4-rounds truncation actually fires
+        lambda: kmeans_fit(vecs, k=3, iterations=5),
     ]
-    for run in runs:
-        assert rows(run(None)) == rows(run(ckdir))
-
-    vecs = spark.createDataFrame(
-        [(i, [float(i % 4), float(i % 7)]) for i in range(24)],
-        "vec_id long, embedding array<double>",
-    )
-    # iterations >= 4 so _fit's every-4-rounds truncation actually fires
-    assert rows(kmeans_fit(vecs, k=3, iterations=5, checkpoint_dir=None)) == rows(
-        kmeans_fit(vecs, k=3, iterations=5, checkpoint_dir=ckdir)
-    )
-    # reliable checkpoint files were actually written
-    found = []
-    for root, _dirs, files in os.walk(ckdir):
-        found += files
-    assert found, "no reliable checkpoint files written under checkpoint_dir"
+    local = [rows(run()) for run in runs]
+    with reliable_checkpoints() as ckdir:
+        assert [rows(run()) for run in runs] == local
+        # reliable checkpoint files were actually written
+        found = []
+        for root, _dirs, files in os.walk(ckdir):
+            found += files
+        assert found, "no reliable checkpoint files written under the checkpoint dir"
+    assert spark.sparkContext.getCheckpointDir() is None
 
 
 def test_broadcast_ranks_knob_identical_results(spark):
@@ -414,18 +410,19 @@ def test_modularity_two_cliques_textbook(spark):
     assert row1.q_num == 0 and row1.modularity == 0.0
 
 
-def test_checkpoint_knob_failure_modes(spark, tmp_path):
-    """The durability HALF of the checkpoint knob (VERDICT r7 task 6 —
-    the parity test above proves identical values; this proves the
-    modes differ exactly where documented). Executor-block loss is
-    simulated by unpersisting every persisted RDD after the iterative
-    op finishes (on a real cluster: an executor dies and its
-    block-manager blocks vanish; localCheckpoint truncated the lineage
-    so the blocks are unrecomputable):
+def test_checkpoint_knob_failure_modes(spark, reliable_checkpoints):
+    """The durability HALF of the switch (the parity test above proves
+    identical values; this proves the modes differ exactly where
+    documented). Executor-block loss is simulated by unpersisting
+    every persisted RDD after the iterative op finishes (on a real
+    cluster: an executor dies and its block-manager blocks vanish;
+    localCheckpoint truncated the lineage so the blocks are
+    unrecomputable):
 
-    * reliable path (checkpoint_dir set): the result re-reads from the
-      checkpoint FILES and survives — the 100 TB mode, where losing at
-      least one of 1000 executors mid-job is ~certain;
+    * reliable path (checkpoint dir set on the context): the result
+      re-reads from the checkpoint FILES and survives — the 100 TB
+      mode, where losing at least one of 1000 executors mid-job is
+      ~certain;
     * local path (default): accessing the result after the loss raises
       (checkpoint block not found) — the documented failure mode that
       makes localCheckpoint a local-mode/short-job optimization only.
@@ -445,14 +442,13 @@ def test_checkpoint_knob_failure_modes(spark, tmp_path):
         while it.hasNext():
             it.next()._2().unpersist(True)
 
-    reliable = connected_components(
-        nodes_df, edges_df, "id", checkpoint_dir=str(tmp_path / "ck")
-    )
-    drop_all_persisted_blocks()
-    got = sorted((r[0], r[1]) for r in reliable.collect())
+    with reliable_checkpoints():
+        reliable = connected_components(nodes_df, edges_df, "id")
+        drop_all_persisted_blocks()
+        got = sorted((r[0], r[1]) for r in reliable.collect())
     assert got == expected
 
-    local = connected_components(nodes_df, edges_df, "id", checkpoint_dir=None)
+    local = connected_components(nodes_df, edges_df, "id")
     drop_all_persisted_blocks()
     with pytest.raises(Exception, match="(?i)checkpoint|block|not found"):
         local.collect()

@@ -291,3 +291,54 @@ def test_read_range_skips_segments_below_range():
         rows = list(_read_range(7, d, 2510, 2520))
         assert [o for _, o, _ in rows] == list(range(2510, 2520))
         assert all(pid == 7 for pid, _, _ in rows)
+
+
+_OUTSIDE_DRIVER = """
+import sys
+sys.path.insert(0, {repo!r})
+from pyspark.sql import SparkSession
+from kafka_flink_spark.sources.kafka_log import register_kafka_log, write_trade_log
+from kafka_flink_spark.sources.trade_gen import register_trade_gen
+
+spark = SparkSession.builder.master("local[2]").config("spark.ui.enabled", "false").getOrCreate()
+register_kafka_log(spark)
+tmp = {tmp!r}
+write_trade_log(tmp + "/log", 4000, segment_rows=1000, n_partitions=2)
+q = (
+    spark.readStream.format("kafka_log").option("path", tmp + "/log")
+    .option("startingOffsets", "earliest").load()
+    .writeStream.format("memory").queryName("outside")
+    .option("checkpointLocation", tmp + "/ckpt")
+    .trigger(availableNow=True).start()
+)
+q.awaitTermination()
+print("ROWS", spark.table("outside").count())
+register_trade_gen(spark)
+print("GEN", spark.read.format("trade_gen").option("rows", "1000").load().count())
+spark.stop()
+"""
+
+
+def test_stream_from_outside_repo_without_pythonpath(tmp_path):
+    """A ``kafka_log`` stream started by a driver whose cwd is not the
+    repo and whose PYTHONPATH is unset (the external driver's shape:
+    it puts the repo on ``sys.path`` itself) must read every record —
+    the data-source Python runners cannot import the package, so the
+    sources (``kafka_log`` and ``trade_gen``) travel by value."""
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    proc = subprocess.run(
+        [sys.executable, "-c", _OUTSIDE_DRIVER.format(repo=repo, tmp=str(tmp_path))],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    lines = proc.stdout.splitlines()
+    assert "ROWS 4000" in lines and "GEN 1000" in lines, proc.stdout

@@ -23,3 +23,19 @@ def test_query_matches_oracle(spark, duck, name):
     register_duck_views(duck, SF_SMALL)
     oracle_pdf = duck.execute(q.oracle).fetchdf()
     assert_frames_match(spark_pdf, oracle_pdf, name)
+
+
+@pytest.mark.parametrize(
+    "name", ["d3_minhash_lsh_pairs", "d7_dedup_clusters", "gr1_pagerank_copurchase"]
+)
+def test_query_matches_oracle_with_reliable_checkpoints(
+    spark, duck, reliable_checkpoints, name
+):
+    """Pin-heavy queries (signature pins, CC rounds, PageRank rounds)
+    give their oracle's rows with every pin written as a reliable
+    checkpoint."""
+    q = QUERIES[name]
+    with reliable_checkpoints():
+        spark_pdf = q.spark_fn(spark, SF_SMALL).toPandas()
+    register_duck_views(duck, SF_SMALL)
+    assert_frames_match(spark_pdf, duck.execute(q.oracle).fetchdf(), name)

@@ -1071,33 +1071,36 @@ def test_kmv_bottom_k_plans_window_group_limit(spark):
 def test_pagerank_broadcast_ranks_no_edge_shuffle_join(spark):
     """The Pregel broadcast knob's plan claim: with broadcast_ranks on
     (the sub-4M-node auto default), a single update round plans the
-    edges-ranks join as BroadcastHashJoin — the edge relation never
-    re-partitions for the join; with the knob off it degrades to a
-    shuffled join. Gate the join strategy on the round's plan shape
-    built exactly like pagerank's loop body."""
+    edge-side join (edges ⋈ broadcast(fac), fac = deg ⋈ broadcast(pr))
+    as BroadcastHashJoin on ``src`` — the edge relation never
+    re-partitions for the join. Gate the join strategy on the round's
+    plan built exactly like pagerank's loop body."""
+    import re
+
     from pyspark.sql import functions as F
 
-    edges = spark.createDataFrame(
-        [(i, (i + 1) % 50) for i in range(50)], "src long, dst long"
-    ).localCheckpoint()
-    deg = edges.groupBy("src").agg(F.count("*").alias("deg"))
-    out_e = edges.join(deg, "src").localCheckpoint()
-    pr = spark.createDataFrame(
-        [(i, 10**9) for i in range(50)], "id long, pr long"
-    ).localCheckpoint()
+    from kafka_flink_spark.operators.graph import PR_DAMP_DEN, PR_DAMP_NUM
+    from kafka_flink_spark.operators.iterative import pin
 
-    def round_plan(prb):
-        return (
-            out_e.join(prb, out_e.src == prb["id"])
-            .groupBy("dst")
-            .agg(F.sum("pr").alias("s"))
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-        )
-
-    broadcast_plan = round_plan(F.broadcast(pr))
-    assert "BroadcastHashJoin" in broadcast_plan, broadcast_plan[:1500]
+    edges = pin(
+        spark.createDataFrame([(i, (i + 1) % 50) for i in range(50)], "src long, dst long")
+    )
+    deg = pin(edges.groupBy("src").agg(F.count("*").alias("deg")))
+    pr = pin(spark.createDataFrame([(i, 10**9) for i in range(50)], "id long, pr long"))
+    fac = deg.join(F.broadcast(pr), deg.src == pr["id"]).select(
+        deg.src,
+        F.expr(f"({PR_DAMP_NUM} * pr) div ({PR_DAMP_DEN} * deg)").alias("_f"),
+    )
+    plan = (
+        edges.join(F.broadcast(fac), "src")
+        .groupBy("dst")
+        .agg(F.sum("_f").alias("s"))
+        ._jdf.queryExecution()
+        .executedPlan()
+        .toString()
+    )
+    # edge-side join: src = src (the fac join is src = id)
+    assert re.search(r"BroadcastHashJoin \[src#\d+L\], \[src#\d+L\]", plan), plan[:2000]
 
 
 def test_hybrid_rrf_shortlist_bounded_fusion(spark):
