@@ -34,7 +34,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from kafka_flink_spark.operators.candles import ohlcv_aggs
+from kafka_flink_spark.operators.candles import ohlcv, ohlcv_aggs
 from kafka_flink_spark.sources.fixtures import stream_events_raw
 
 
@@ -71,20 +71,8 @@ def ohlcv_stream(
     * ``append`` → W12 end-of-window finals (once per closed window);
     * ``update``/``complete`` → W11 running candles per micro-batch.
     """
-    return (
-        trades.withWatermark("ts", watermark_delay)
-        .groupBy(F.window("ts", window_duration).alias("w"), F.col(key_col))
-        .agg(*ohlcv_aggs("ts", "price", "qty", seq_col="seq"))
-        .select(
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-            key_col,
-            "open",
-            "high",
-            "low",
-            "close",
-            "volume",
-        )
+    return ohlcv(
+        trades.withWatermark("ts", watermark_delay), window_duration, key_col, seq_col="seq"
     )
 
 
@@ -208,9 +196,8 @@ def run_available_now(
     MICRO-BATCH, so partition count should track key cardinality and
     sustained throughput, not the batch shuffle default — the
     measured curve on the 2k-key OHLCV replay is 32 partitions ->
-    42k ev/s, 16 -> 64k, 8 -> 72k (SCALING.md; the same rationale
-    bench.py's throughput replay documents), and the replay fixtures
-    here have at most a few thousand keys. Default: the
+    42k ev/s, 16 -> 64k, 8 -> 72k (SCALING.md), and the replay
+    fixtures here have at most a few thousand keys. Default: the
     ``SPARK_GRAFT_STREAM_SHUFFLE`` env (fall back 8); production
     resident jobs size it to keys × rate before first checkpoint —
     see session.cluster_conf(). Results are partition-count-
@@ -221,6 +208,12 @@ def run_available_now(
     the result is cached and pinned, then the view is dropped and the
     checkpoint dir deleted, so repeated calls (tests, bench loops)
     don't accumulate driver memory or disk.
+
+    The Python data sources (``kafka_log``, ``trade_gen``) drain any
+    backlog as ONE micro-batch: Spark 4.1.2's ``PythonMicroBatchStream``
+    implements only ``MicroBatchStream`` and ``AcceptsLatestSeenOffset``,
+    so Spark falls back to single-batch execution for availableNow; no
+    code in this package can change that.
 
     SINGLE-THREADED BY CONTRACT (ADVICE r11): the partition count is
     applied by toggling the session-global

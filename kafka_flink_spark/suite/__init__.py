@@ -89,22 +89,11 @@ def _load() -> None:
         importlib.import_module(mod)
 
 
-# Driver-verification rotation. The correctness driver samples the
-# FIRST 50 queries in iteration order each round. Cumulative state
-# after r9: 293/293 registered queries green on their newest driver
-# row, none older than round 4 (VERDICT r9). Round 10 executes
-# VERDICT r9 task 1 verbatim: lead with the two queries whose code
-# changed in r9 AFTER their newest driver row (t40_stupid_backoff_lm,
-# newest row r8; io12_exactly_once_sink, newest row r5 — both
-# judge-verified PASS first-hand but driver rows win), then the 43
-# r4-era rows in their CORRECTNESS_r04 order, then the 5 oldest
-# r5-era rows in their CORRECTNESS_r05 order. After this round no
-# registered query's newest driver row is older than r5.
+# The correctness driver samples the first 50 queries in iteration
+# order; these names lead it (all_queries floats them to the front).
 _DRIVER_PRIORITY: tuple[str, ...] = (
-    # ---- changed-after-newest-row leads (2) ----
     "t40_stupid_backoff_lm",
     "io12_exactly_once_sink",
-    # ---- round-4-era rows (43), CORRECTNESS_r04 order ----
     "w21_stream_outer_interval_join",
     "w22_stream_dedup_within_watermark",
     "w23_stream_full_outer_interval_join",
@@ -148,16 +137,11 @@ _DRIVER_PRIORITY: tuple[str, ...] = (
     "v10_ann_recall_eval",
     "w5_distribution_ranks",
     "w26_stream_topk_complete",
-    # ---- oldest round-5-era rows (5), CORRECTNESS_r05 order ----
     "t31_bm25_scores",
     "v11_pq_adc_topk",
     "pipe7_web_corpus_pipeline",
     "g19_mode_median_minmax_by",
     "set4_bag_semantics",
-    # ---- 50-query budget line (round 10): exactly 2 + 43 + 5 = 50 ----
-    # Round-11 rotation queue (replace this tuple at r11 start): lead
-    # with any r10 non-green and any queries edited after their newest
-    # driver row, then the remaining r5-era rows oldest-first.
 )
 
 

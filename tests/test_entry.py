@@ -108,3 +108,40 @@ def test_pin_without_spark_context_cuts_locally():
         checkpoint=lambda: "reliable",
     )
     assert pin(df) == "local"
+
+
+def test_bench_sections_registered_and_disjoint():
+    """bench.py times its section table without filtering, so every name
+    must be registered, and each query is timed in one section only."""
+    import bench
+    from kafka_flink_spark import suite
+
+    qs = suite.all_queries()
+    names = [n for section in bench.SECTIONS.values() for n in section]
+    assert [n for n in names if n not in qs] == []
+    assert len(set(names)) == len(names)
+    assert list(bench.SECTIONS)[0] == "headline"
+    assert list(bench.SECTIONS)[-1] == "stream"
+
+
+def test_bench_preflight_degrades_on_bad_environment(monkeypatch):
+    """A non-integer ``SPARK_GRAFT_CPUS`` or a platform without
+    ``os.getloadavg`` skips the bench's load pre-flight instead of
+    raising, and never sleeps."""
+    import os
+    import time
+
+    import bench
+
+    def no_sleep(_):
+        raise AssertionError("pre-flight slept")
+
+    monkeypatch.setattr(time, "sleep", no_sleep)
+    monkeypatch.setattr(os, "getloadavg", lambda: (100.0, 100.0, 100.0))
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "8.0")
+    bench._wait_for_idle_box()
+
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "4")
+    monkeypatch.delattr(os, "getloadavg")
+    bench._wait_for_idle_box()
+    assert bench._load_1m() is None
