@@ -4,14 +4,19 @@ Dedup/fingerprint operators need hashes that (a) are stable across
 Spark executors and runs, and (b) can be reproduced bit-for-bit by the
 DuckDB oracle for differential testing. Spark's ``xxhash64`` and
 DuckDB's ``hash()`` differ, so the portable primitive is **md5**
-(identical hex output in both engines): we take the first 16 hex chars
-as an unsigned-ish 63-bit integer.
+(identical hex output in both engines): we take the first 15 hex chars
+as a non-negative 60-bit integer.
 
-All helpers are native Column expressions (md5/conv/substring are
-JVM-side, codegen'd) — no Python UDFs in dedup hot paths.
+This module is the only place that format is written out, once per
+engine: :func:`md5_long` (Spark Column), :func:`duckdb_md5_long`
+(DuckDB SQL text) and :func:`md5_long_value` (Python int). The Spark
+form is a native Column expression (md5/conv/substring are JVM-side,
+codegen'd) — no Python UDFs in dedup hot paths.
 """
 
 from __future__ import annotations
+
+import hashlib
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -24,10 +29,6 @@ def md5_long(col: Column | str, salt: str = "") -> Column:
     range in both Spark (LONG) and DuckDB (BIGINT) without overflow
     games, while collision probability stays negligible for dedup
     banding (2^-60 per pair).
-
-    DuckDB oracle equivalent::
-
-        CAST(('0x' || substr(md5(<salt> || col), 1, 15)) AS BIGINT)
     """
     c = F.col(col) if isinstance(col, str) else col
     if salt:
@@ -35,23 +36,18 @@ def md5_long(col: Column | str, salt: str = "") -> Column:
     return F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("long")
 
 
-def minhash_value(col: Column | str, perm: int) -> Column:
-    """One MinHash permutation: h_p(x) = md5_long(x) XOR K_p, where
-    K_p is an md5-derived 60-bit constant (operators/dedup.
-    perm_constant). One digest per input plus a xor per permutation —
-    ~num_perms cheaper than salted re-hashing, still portable SQL
-    (DuckDB ``xor(h, K)``); xor by a constant is a bijection, so the
-    min is over a uniform relabeling. Production deployments that
-    don't need cross-engine oracles can swap md5_long for Spark's
-    native ``xxhash64`` (~6x faster digests) without touching the
-    banding math."""
-    from kafka_flink_spark.operators.dedup import perm_constant
-
-    c = md5_long(col)
-    return c.bitwiseXOR(F.lit(perm_constant(perm)).cast("long"))
+def duckdb_md5_prefix(expr: str, hex_chars: int, sql_type: str) -> str:
+    """DuckDB SQL for the first ``hex_chars`` hex digits of md5(expr)
+    read as an integer of ``sql_type``."""
+    return f"CAST(('0x' || substr(md5({expr}), 1, {hex_chars})) AS {sql_type})"
 
 
 def duckdb_md5_long(expr: str, salt: str = "") -> str:
     """The DuckDB SQL string mirroring :func:`md5_long` for oracles."""
-    inner = f"'{salt}' || {expr}" if salt else expr
-    return f"CAST(('0x' || substr(md5({inner}), 1, 15)) AS BIGINT)"
+    return duckdb_md5_prefix(f"'{salt}' || {expr}" if salt else expr, 15, "BIGINT")
+
+
+def md5_long_value(s: str) -> int:
+    """The Python int mirroring :func:`md5_long` for driver-side
+    constants and per-row code outside the JVM (UTF-8 encoded)."""
+    return int(hashlib.md5(s.encode("utf-8")).hexdigest()[:15], 16)

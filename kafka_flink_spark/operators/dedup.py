@@ -34,18 +34,12 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from kafka_flink_spark.functions.hashing import md5_long, md5_long_value
 from kafka_flink_spark.operators.iterative import pin
 
 SHINGLE_K = 3
 NUM_PERMS = 16
 NUM_BANDS = 8  # 8 bands × 2 rows: P(candidate) = 1-(1-j^2)^8 — 0.9 @ j≈0.5
-
-
-def _md5_long_expr(c: Column, salt: str = "") -> Column:
-    """Portable 60-bit hash of a column expression (see functions/hashing)."""
-    if salt:
-        c = F.concat(F.lit(salt), c)
-    return F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("long")
 
 
 def shingle_array(col: str = "text", k: int = SHINGLE_K) -> Column:
@@ -101,9 +95,7 @@ def exact_dedup(df: DataFrame, col: str = "text", id_col: str = "doc_id") -> Dat
 def perm_constant(p: int) -> int:
     """60-bit xor constant for permutation ``p``: md5-derived, so the
     DuckDB oracle reproduces it from the same public recipe."""
-    import hashlib
-
-    return int(hashlib.md5(f"perm:{p}".encode()).hexdigest()[:15], 16)
+    return md5_long_value(f"perm:{p}")
 
 
 def minhash_signatures(
@@ -147,7 +139,7 @@ def minhash_signatures(
         df = fan_out_narrow(df)
     hashed = df.select(
         F.col(id_col), F.explode(shingle_array(col)).alias("s")
-    ).select(F.col(id_col), _md5_long_expr(F.col("s")).alias("h"))
+    ).select(F.col(id_col), md5_long("s").alias("h"))
     aggs = [
         F.min(F.col("h").bitwiseXOR(F.lit(perm_constant(p)).cast("long"))).alias(
             f"mh{p}"
@@ -552,7 +544,7 @@ def simhash(
     toks = F.split(F.col(col), " ")
     exploded = df.select(
         F.col(id_col), F.explode(toks).alias("_t")
-    ).select(F.col(id_col), _md5_long_expr(F.col("_t")).alias("h"))
+    ).select(F.col(id_col), md5_long("_t").alias("h"))
     ones = [
         F.sum(F.shiftright("h", i).bitwiseAND(F.lit(1))).alias(f"o{i}")
         for i in range(SIMHASH_BITS)

@@ -25,6 +25,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from kafka_flink_spark.functions.hashing import md5_long, md5_long_value
 from kafka_flink_spark.operators.iterative import pin
 
 EMBED_DIM = 64
@@ -112,9 +113,7 @@ def plane_component(p: int, i: int) -> float:
     """Deterministic hyperplane component in [-1, 1): derived from
     md5(f"plane:{p}:{i}") so any engine reproduces it. Python-side
     constant (planes are tiny); baked into the plan as literals."""
-    import hashlib
-
-    h = int(hashlib.md5(f"plane:{p}:{i}".encode()).hexdigest()[:15], 16)
+    h = md5_long_value(f"plane:{p}:{i}")
     return (h % 2_000_000) / 1_000_000.0 - 1.0
 
 
@@ -803,9 +802,7 @@ def rp_component(j: int, i: int) -> float:
     [-1, 1): md5(f"rp:{j}:{i}") — same public recipe as
     plane_component, distinct salt so projections and LSH planes stay
     independent."""
-    import hashlib
-
-    h = int(hashlib.md5(f"rp:{j}:{i}".encode()).hexdigest()[:15], 16)
+    h = md5_long_value(f"rp:{j}:{i}")
     return (h % 2_000_000) / 1_000_000.0 - 1.0
 
 
@@ -1253,8 +1250,6 @@ def nn_descent(
     # is NN-descent's worst case: no long-range mixing, neighborhoods
     # expand arithmetically instead of multiplicatively), made a pure
     # function of (u, j) so the unrolled-SQL oracle reproduces it.
-    from kafka_flink_spark.functions.hashing import md5_long
-
     ring = (
         vecs.select(
             F.col("vid").alias("u"),
@@ -1436,8 +1431,6 @@ def graph_ann_search(
                 ).alias("cs"),
             )
         )
-
-    from kafka_flink_spark.functions.hashing import md5_long
 
     n = base.count()
     entry = (

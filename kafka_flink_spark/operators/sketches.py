@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from kafka_flink_spark.functions.hashing import md5_long
+from kafka_flink_spark.functions.hashing import duckdb_md5_long, md5_long
 
 CMS_DEPTH = 4
 CMS_WIDTH = 256
@@ -34,7 +34,7 @@ CMS_WIDTH = 256
 
 def _key_hash(key: Column) -> Column:
     """One 60-bit md5 per key; every depth's bucket slices out of it."""
-    return md5_long(F.concat(F.lit("cms:"), key.cast("string")))
+    return md5_long(key.cast("string"), salt="cms:")
 
 
 def _buckets(h: Column, depth: int, width: int) -> Column:
@@ -162,7 +162,7 @@ def kmv_bottom_k(
         .filter(F.col("m").isNotNull())
         .select(
             "s",
-            md5_long(F.concat(F.lit("kmv:"), F.col("m").cast("string"))).alias("h"),
+            md5_long(F.col("m").cast("string"), salt="kmv:").alias("h"),
         )
         .distinct()
     )
@@ -252,7 +252,7 @@ WITH dm AS (SELECT DISTINCT event_type AS s, user_id AS m FROM events
             WHERE user_id IS NOT NULL),
 hashed AS (
     SELECT DISTINCT s,
-           CAST(('0x' || substr(md5('kmv:' || CAST(m AS VARCHAR)), 1, 15)) AS BIGINT) AS h
+           {duckdb_md5_long("CAST(m AS VARCHAR)", salt="kmv:")} AS h
     FROM dm
 ),
 ranked AS (SELECT s, h, row_number() OVER (PARTITION BY s ORDER BY h) AS rn FROM hashed),
@@ -293,10 +293,7 @@ LEFT JOIN exact x ON x.set_a = p.set_a AND x.set_b = p.set_b
 # the lineitem fixture (l_partkey frequencies) — shared by the batch
 # query (g15) and its streaming twin (w35, whose final counters equal
 # the batch build's exactly: CMS counters merge by addition).
-_CMS_HASH_SQL = (
-    "CAST(('0x' || substr(md5('cms:' || CAST(l_partkey AS VARCHAR)), 1, 15)) "
-    "AS BIGINT)"
-)
+_CMS_HASH_SQL = duckdb_md5_long("CAST(l_partkey AS VARCHAR)", salt="cms:")
 CMS_ORACLE_SQL = f"""
 WITH hashed AS (SELECT l_partkey, {_CMS_HASH_SQL} AS h FROM lineitem),
 fanned AS (

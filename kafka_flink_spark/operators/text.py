@@ -15,9 +15,10 @@ from __future__ import annotations
 
 import pandas as pd  # module-level: pandas_udf type hints resolve via globals
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kafka_flink_spark.functions.hashing import md5_long
 from kafka_flink_spark.operators.iterative import pin
 
 # Tiny per-language function-word profiles for the n-gram/stopword
@@ -125,7 +126,7 @@ def fingerprint(df: DataFrame, col: str = "text") -> DataFrame:
     return df.withColumns(
         {
             "fp_md5": F.md5(norm),
-            "fp_long": F.conv(F.substring(F.md5(norm), 1, 15), 16, 10).cast("long"),
+            "fp_long": md5_long(norm),
         }
     )
 
@@ -204,9 +205,7 @@ def hash_sample(
     runs, and stable under re-partitioning — properties
     ``df.sample()`` cannot give. Narrow (zero-shuffle) filter.
     """
-    h = F.conv(F.substring(F.md5(F.col(key_col).cast("string")), 1, 15), 16, 10).cast(
-        "long"
-    )
+    h = md5_long(F.col(key_col).cast("string"))
     rate = F.lit(default_rate)
     for stratum, r in sorted(rates.items()):
         rate = F.when(F.col(strata_col) == stratum, F.lit(r)).otherwise(rate)
@@ -432,9 +431,9 @@ def decontaminate(
             )
             .select(
                 id_col,
-                md5_long_gram(
+                md5_long(
                     F.array_join(F.slice("_toks", F.col("_pos"), n), " ")
-                ),
+                ).alias("gram_h"),
             )
         )
 
@@ -462,13 +461,6 @@ def decontaminate(
     )
 
 
-def md5_long_gram(gram: Column) -> Column:
-    """n-gram → 60-bit md5 long (oracle-reproducible shuffle key)."""
-    from kafka_flink_spark.functions.hashing import md5_long
-
-    return md5_long(gram).alias("gram_h")
-
-
 def pack_documents(
     df: DataFrame,
     capacity: int = 8192,
@@ -493,10 +485,7 @@ def pack_documents(
 
     n_tokens = F.size(tokens(col)).cast("long")
     shard = F.pmod(
-        F.conv(F.substring(F.md5(F.col(id_col).cast("string")), 1, 15), 16, 10).cast(
-            "long"
-        ),
-        F.lit(num_shards),
+        md5_long(F.col(id_col).cast("string")), F.lit(num_shards)
     ).cast("int")
     base = df.select(F.col(id_col), n_tokens.alias("n_tokens"), shard.alias("shard"))
     w = (
@@ -634,8 +623,7 @@ def cdc_chunk_dedup(
         F.col(id_col),
         F.posexplode(F.split(F.col(col), " ")).alias("_pos", "_tok"),
     )
-    md5l = F.conv(F.substring(F.md5("_tok"), 1, 15), 16, 10).cast("long")
-    is_boundary = (F.col("_pos") >= 1) & (md5l % boundary_mod == 0)
+    is_boundary = (F.col("_pos") >= 1) & (md5_long("_tok") % boundary_mod == 0)
     w = (
         Window.partitionBy(id_col)
         .orderBy("_pos")
@@ -752,7 +740,7 @@ def ngram_novelty(
         F.explode(shingle_array(col, n)).alias("_g"),
     ).select(
         F.col(id_col),
-        F.conv(F.substring(F.md5("_g"), 1, 15), 16, 10).cast("long").alias("_h"),
+        md5_long("_g").alias("_h"),
     )
     first_seen = grams.groupBy("_h").agg(F.min(id_col).alias("_first"))
     return (
@@ -933,7 +921,7 @@ def _token_window_hashes(
     )
     wins = (
         tok_rows.withColumn("_last", F.lead("tok", k - 1).over(w_doc))
-        .withColumn("wh", md5_long_gram(gram))
+        .withColumn("wh", md5_long(gram))
         .filter(F.col("_last").isNotNull())
         .select(id_col, *carry, "pos", "wh")
     )
@@ -1238,7 +1226,7 @@ def deterministic_shuffle(
 
     key = F.md5(F.concat(F.lit("shuffle:"), F.col(id_col).cast("string")))
     shard = F.pmod(
-        F.conv(F.substring(key, 1, 15), 16, 10).cast("long"), F.lit(n_shards)
+        md5_long(F.col(id_col).cast("string"), salt="shuffle:"), F.lit(n_shards)
     ).cast("long")
     w = Window.partitionBy("shard").orderBy("sort_key", id_col)
     return (
@@ -1441,7 +1429,7 @@ def curriculum_order(
         .alias("quality_bin"),
         key.alias("sort_key"),
         F.pmod(
-            F.conv(F.substring(key, 1, 15), 16, 10).cast("long"), F.lit(n_shards)
+            md5_long(F.col(id_col).cast("string"), salt="curr:"), F.lit(n_shards)
         )
         .cast("long")
         .alias("shard"),
@@ -1507,14 +1495,7 @@ def temperature_mix(
         ).alias("rate_ppm"),
     )
     gate = F.pmod(
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("tmix:"), F.col(id_col).cast("string"))), 1, 15
-            ),
-            16,
-            10,
-        ).cast("long"),
-        F.lit(1_000_000),
+        md5_long(F.col(id_col).cast("string"), salt="tmix:"), F.lit(1_000_000)
     )
     sampled = (
         df.select(id_col, source_col)
@@ -1762,14 +1743,7 @@ def weighted_priority_sample(
     TakeOrderedAndProject (per-partition heaps + driver merge of k
     rows) — no global sort, no single-partition window.
     """
-    u = (
-        F.conv(
-            F.substring(F.md5(F.concat(F.lit("wps:"), F.col(id_col).cast("string"))), 1, 15),
-            16,
-            10,
-        ).cast("long")
-        % WPS_U_MOD
-    )
+    u = md5_long(F.col(id_col).cast("string"), salt="wps:") % WPS_U_MOD
     # regexp_count of non-space runs == count of non-empty whitespace
     # tokens, entirely in codegen — an F.filter lambda here would run
     # interpreted per document on the operator's only corpus-sized
@@ -1823,8 +1797,6 @@ def line_dedup(
     inside its hash partition, never materialized as a group.
     """
     from pyspark.sql.window import Window
-
-    from kafka_flink_spark.functions.hashing import md5_long
 
     toks = F.split(F.col(col), " ")
     base = df.select(
@@ -1916,7 +1888,6 @@ def dsir_importance(
     back onto the same narrow token stream; per-doc accounting is one
     groupBy. Raw text never shuffles.
     """
-    from kafka_flink_spark.functions.hashing import md5_long
     from kafka_flink_spark.operators.partitioning import fan_out_narrow
 
     df = fan_out_narrow(df)
@@ -1996,6 +1967,38 @@ def unicode_normalize(
     return df.withColumn(out_col or col, _norm(F.col(col)))
 
 
+def hashed_tokens(
+    df: DataFrame, col: str = "text", id_col: str = "doc_id", n_buckets: int = 256
+) -> DataFrame:
+    """Signed hashing-trick features (Weinberger et al. 2009): one
+    ``(id_col, bucket, sgn)`` row per non-empty whitespace token, with
+    ``bucket = md5_long('fh:' || t) mod n_buckets`` and a second-hash
+    sign ``sgn = +1`` iff ``md5_long('fhs:' || t)`` is odd, else -1.
+    Stateless and narrow (explode + two digests), so the same frame
+    runs on a batch scan or a stream; callers aggregate it."""
+    tok = df.select(
+        id_col, F.explode(F.split(col, " ")).alias("t")
+    ).filter(F.col("t") != "")
+    return tok.select(
+        id_col,
+        (md5_long("t", salt="fh:") % n_buckets).alias("bucket"),
+        F.when(md5_long("t", salt="fhs:") % 2 == 1, 1).otherwise(-1).alias("sgn"),
+    )
+
+
+def bucket_weights(spark: SparkSession, n_buckets: int = 256) -> DataFrame:
+    """Deterministic linear-model weight vector over the
+    :func:`hashed_tokens` buckets: ``(bucket, w)`` with
+    ``w(b) = md5_long('lmw:' || b) mod 2001 - 1000`` (integers in
+    [-1000, 1000]), a stand-in for offline-trained coefficients."""
+    return spark.range(n_buckets).select(
+        F.col("id").alias("bucket"),
+        (md5_long(F.col("id").cast("string"), salt="lmw:") % 2001 - 1000)
+        .cast("long")
+        .alias("w"),
+    )
+
+
 def linear_model_score(
     df: DataFrame,
     col: str = "text",
@@ -2014,13 +2017,12 @@ def linear_model_score(
     Tungsten: no Python, no Arrow transfer, and the only exchange
     carries ≤ ``n_buckets`` rows per document regardless of length.
 
-    Features reuse fe3's signed hashing-trick encoder (same ``fh:`` /
-    ``fhs:`` hash family, so one featurization pass can serve both);
-    the weight vector is a deterministic md5-derived fixture
-    (``w(b) = md5_long('lmw:' || b) mod 2001 - 1000``, integers in
-    [-1000, 1000]) standing in for offline-trained coefficients — a
-    real deployment swaps the generated relation for a 256-row
-    parquet of learned weights and every plan property is unchanged.
+    Features are fe3's signed hashing-trick encoder
+    (:func:`hashed_tokens`, so one featurization pass can serve both);
+    the weight vector is the md5-derived :func:`bucket_weights`
+    fixture — a real deployment swaps the generated relation for a
+    256-row parquet of learned weights and every plan property is
+    unchanged.
     The margin is exact integer arithmetic, so the decision boundary
     (and the oracle hash) is bit-identical across engines; no sigmoid
     — monotone in the margin, so thresholding the margin IS
@@ -2028,25 +2030,8 @@ def linear_model_score(
 
     Returns (id_col, n_tokens, margin, keep).
     """
-    from kafka_flink_spark.functions.hashing import md5_long
-
-    spark = df.sparkSession
-    weights = spark.range(n_buckets).select(
-        F.col("id").alias("bucket"),
-        (md5_long(F.concat(F.lit("lmw:"), F.col("id").cast("string"))) % 2001 - 1000)
-        .cast("long")
-        .alias("w"),
-    )
-    tok = df.select(
-        id_col, F.explode(F.split(col, " ")).alias("t")
-    ).filter(F.col("t") != "")
-    hashed = tok.select(
-        id_col,
-        (md5_long(F.concat(F.lit("fh:"), F.col("t"))) % n_buckets).alias("bucket"),
-        F.when(md5_long(F.concat(F.lit("fhs:"), F.col("t"))) % 2 == 1, 1)
-        .otherwise(-1)
-        .alias("sgn"),
-    )
+    weights = bucket_weights(df.sparkSession, n_buckets)
+    hashed = hashed_tokens(df, col, id_col, n_buckets)
     # partial-aggregable: (doc, bucket) counts combine map-side before
     # the one exchange; the broadcast weight join adds no shuffle.
     vec = hashed.groupBy(id_col, "bucket").agg(

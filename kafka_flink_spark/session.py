@@ -147,14 +147,20 @@ def get_session(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession with the engine's defaults.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (falling back to
-    ``local[*]``) so the same entry point works for tests and bench.
+    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` so the same entry
+    point works for tests and bench; an integer-valued setting ("8",
+    "8.0") gives ``local[8]``, and an unset, non-numeric or non-positive
+    one falls back to ``local[*]``.
     ``shuffle_partitions`` resolves as: the argument, else
     ``$SPARK_GRAFT_SHUFFLE`` (the ``RUNTIME_CONF`` value), else 32.
     """
     if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS")
-        master = f"local[{cpus}]" if cpus else "local[*]"
+        try:
+            cpus = float(os.environ.get("SPARK_GRAFT_CPUS", ""))
+        except ValueError:
+            cpus = 0.0
+        whole = cpus >= 1 and cpus.is_integer()
+        master = f"local[{int(cpus)}]" if whole else "local[*]"
 
     builder = (
         SparkSession.builder.appName(app_name)

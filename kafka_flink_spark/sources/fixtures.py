@@ -133,25 +133,28 @@ def load_tables(
     return out
 
 
-def trades_view(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The A1-shaped trade stream derived from ``events``.
+def _trades(events: DataFrame) -> DataFrame:
+    """The events → trades projection (batch or streaming ``events``).
 
     Columns: ts TIMESTAMP, instrument_id STRING, product STRING,
     price DOUBLE, qty LONG, seq LONG (monotonic tie-break, the Spark
     re-expression of the reference's arrival-order dependence —
     SURVEY.md §7.4.4).
     """
-    return (
-        load_table(spark, sf_dir, "events")
-        .select(
-            F.col("ts"),
-            F.concat(F.lit("Instrument_"), F.col("user_id")).alias("instrument_id"),
-            F.col("event_type").alias("product"),
-            F.col("value").alias("price"),
-            F.get_json_object("props", "$.k").cast("long").alias("qty"),
-            F.col("event_id").alias("seq"),
-        )
+    return events.select(
+        F.col("ts"),
+        F.concat(F.lit("Instrument_"), F.col("user_id")).alias("instrument_id"),
+        F.col("event_type").alias("product"),
+        F.col("value").alias("price"),
+        F.get_json_object("props", "$.k").cast("long").alias("qty"),
+        F.col("event_id").alias("seq"),
     )
+
+
+def trades_view(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The A1-shaped trade stream derived from ``events`` (see
+    :func:`_trades` for the columns)."""
+    return _trades(load_table(spark, sf_dir, "events"))
 
 
 # DuckDB-side equivalent of trades_view, for composing oracle SQL.

@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kafka_flink_spark.operators.candles import ohlcv, ohlcv_aggs
-from kafka_flink_spark.sources.fixtures import stream_events_raw
+from kafka_flink_spark.sources.fixtures import _trades, stream_events_raw
 
 
 def stream_trades_from_fixture(
@@ -48,15 +48,7 @@ def stream_trades_from_fixture(
     ``ts`` arrives already normalized to TIMESTAMP by the fixture
     source wrapper, whichever parquet encoding the fixture used.
     """
-    events = stream_events_raw(spark, sf_dir, max_files_per_trigger)
-    return events.select(
-        F.col("ts"),
-        F.concat(F.lit("Instrument_"), F.col("user_id")).alias("instrument_id"),
-        F.col("event_type").alias("product"),
-        F.col("value").alias("price"),
-        F.get_json_object("props", "$.k").cast("long").alias("qty"),
-        F.col("event_id").alias("seq"),
-    )
+    return _trades(stream_events_raw(spark, sf_dir, max_files_per_trigger))
 
 
 def ohlcv_stream(
@@ -183,7 +175,7 @@ def run_available_now(
     stream_df: DataFrame,
     output_mode: str,
     name: str | None = None,
-    shuffle_partitions: int | None = None,
+    shuffle_partitions: int = 8,
 ) -> DataFrame:
     """Execute a streaming frame to completion (availableNow trigger →
     memory sink) and return the materialized result. The test/replay
@@ -197,10 +189,9 @@ def run_available_now(
     sustained throughput, not the batch shuffle default — the
     measured curve on the 2k-key OHLCV replay is 32 partitions ->
     42k ev/s, 16 -> 64k, 8 -> 72k (SCALING.md), and the replay
-    fixtures here have at most a few thousand keys. Default: the
-    ``SPARK_GRAFT_STREAM_SHUFFLE`` env (fall back 8); production
-    resident jobs size it to keys × rate before first checkpoint —
-    see session.cluster_conf(). Results are partition-count-
+    fixtures here have at most a few thousand keys. Default: 8;
+    production resident jobs size it to keys × rate before first
+    checkpoint — see session.cluster_conf(). Results are partition-count-
     independent (all stateful ops are keyed; swept across providers
     and AQE modes in earlier rounds), so this is physical-plan only.
 
@@ -228,13 +219,9 @@ def run_available_now(
     give each its own SparkSession (``spark.newSession()`` shares the
     context but isolates the conf).
     """
-    import os
-
     name = name or f"q_{uuid.uuid4().hex[:12]}"
     ckpt = tempfile.mkdtemp(prefix=f"ckpt_{name}_")
     spark = stream_df.sparkSession
-    if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE", "8"))
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))

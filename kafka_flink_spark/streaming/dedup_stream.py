@@ -27,8 +27,8 @@ from pyspark.sql import DataFrame
 
 def _simhash_series(texts: pd.Series) -> pd.Series:
     """Vectorized per-row SimHash, bit-equal to the batch corpus
-    aggregation (operators/dedup.simhash, dedup.py:513): per token
-    OCCURRENCE, md5-long (hexdigest[:15] = 60 bits) votes on each bit;
+    aggregation (operators/dedup.simhash): per token OCCURRENCE, the
+    60-bit md5 hash (functions/hashing.md5_long_value) votes on each bit;
     bit i is set when ones*2 > n_tokens.
 
     The batch form keeps the whole computation in whole-stage codegen
@@ -43,10 +43,9 @@ def _simhash_series(texts: pd.Series) -> pd.Series:
     work into C. ``tests/test_properties.py`` pins stream-sig ==
     batch-sig bit-equal.
     """
-    import hashlib
-
     import numpy as np
 
+    from kafka_flink_spark.functions.hashing import md5_long_value
     from kafka_flink_spark.operators.dedup import SIMHASH_BITS
 
     if len(texts) == 0:
@@ -60,12 +59,7 @@ def _simhash_series(texts: pd.Series) -> pd.Series:
     )
     codes, uniques = pd.factorize(flat, use_na_sentinel=False)
     uh = np.fromiter(
-        (
-            int(hashlib.md5(u.encode("utf-8")).hexdigest()[:15], 16)
-            for u in uniques
-        ),
-        dtype=np.uint64,
-        count=len(uniques),
+        (md5_long_value(u) for u in uniques), dtype=np.uint64, count=len(uniques)
     )
     # Per-document segment sums, one vectorized pass per BIT over the
     # flat occurrence array — NOT a T×60 gather (a materialized

@@ -44,7 +44,7 @@ def kmv_stream(
     estimates at any point in the stream's life.
 
     Hashing happens JVM-SIDE with the batch twin's exact expression
-    (``md5_long(concat('kmv:', member))`` — functions/hashing.py), in
+    (``md5_long(member, salt='kmv:')`` — functions/hashing.py), in
     a narrow projection BEFORE the stateful operator: the state-store
     shuffle carries 8-byte hashes, never raw members, and stream/batch
     bit-identity holds BY CONSTRUCTION (one shared expression), not by
@@ -78,9 +78,7 @@ def kmv_stream(
         members.filter(F.col(member_col).isNotNull())
         .select(
             F.col(set_col).alias("_s"),
-            md5_long(
-                F.concat(F.lit("kmv:"), F.col(member_col).cast("string"))
-            ).alias("_h"),
+            md5_long(F.col(member_col).cast("string"), salt="kmv:").alias("_h"),
         )
         .groupBy("_s")
         .applyInPandasWithState(

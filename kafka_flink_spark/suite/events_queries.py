@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from kafka_flink_spark.functions.hashing import duckdb_md5_long, md5_long
 from kafka_flink_spark.sources.fixtures import load_table
 from kafka_flink_spark.suite import register
 
@@ -948,11 +949,10 @@ def e16_cep_followed_by(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "e17_ab_test_welch",
-    oracle="""
+    oracle=f"""
 WITH per_user AS (
     SELECT user_id,
-           CAST(('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 15)) AS BIGINT) % 2
-               AS variant,
+           {duckdb_md5_long("CAST(user_id AS VARCHAR)")} % 2 AS variant,
            max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS converted,
            coalesce(sum(CASE WHEN event_type = 'purchase'
                              THEN CAST(round(value * 100) AS BIGINT) END), 0)
@@ -1000,8 +1000,6 @@ FROM m
     "(partial-aggregable) + one scalar exchange.",
 )
 def e17_ab_test_welch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from kafka_flink_spark.functions.hashing import md5_long
-
     ev = load_table(spark, sf_dir, "events").select("user_id", "event_type", "value")
     # Per-user revenue in EXACT integer cents (purchase values are
     # cents-quantized in the fixture): the moment sums below are then

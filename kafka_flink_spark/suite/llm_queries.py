@@ -13,6 +13,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kafka_flink_spark.functions.hashing import (
+    duckdb_md5_long,
+    duckdb_md5_prefix,
+    md5_long,
+)
 from kafka_flink_spark.operators import dedup as D
 from kafka_flink_spark.operators import similarity as S
 from kafka_flink_spark.operators import text as X
@@ -21,13 +26,6 @@ from kafka_flink_spark.sources.fixtures import load_table
 from kafka_flink_spark.suite import register
 
 # --- shared DuckDB SQL fragments ---------------------------------------------
-
-_MD5L = "CAST(('0x' || substr(md5({expr}), 1, 15)) AS BIGINT)"
-
-
-def _md5l(expr: str) -> str:
-    return _MD5L.format(expr=expr)
-
 
 _SHINGLES_CTE = f"""
 sh AS (
@@ -140,7 +138,7 @@ def t3_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
 SELECT doc_id,
        md5(lower(trim(text))) AS fp_md5,
-       {_md5l("lower(trim(text))")} AS fp_long
+       {duckdb_md5_long("lower(trim(text))")} AS fp_long
 FROM documents
 """,
     doc="Document fingerprinting: md5 of normalized text + 60-bit "
@@ -207,7 +205,7 @@ def _minhash_cand_sql() -> str:
     k_list = ", ".join(str(D.perm_constant(p)) for p in range(perms))
     return f"""hashed AS (
     SELECT doc_id, shingles,
-           list_transform(shingles, s -> {_md5l("s")}) AS hs
+           list_transform(shingles, s -> {duckdb_md5_long("s")}) AS hs
     FROM sh
 ),
 sig AS (
@@ -306,7 +304,7 @@ sh AS (
                 ELSE [array_to_string(w, ' ')] END AS shingles
     FROM w
 ),
-hashed AS (SELECT doc_id, list_transform(shingles, s -> {_md5l("s")}) AS hs FROM sh),
+hashed AS (SELECT doc_id, list_transform(shingles, s -> {duckdb_md5_long("s")}) AS hs FROM sh),
 sig AS (
     SELECT doc_id,
            list_transform([{k_list}], k ->
@@ -407,7 +405,7 @@ def _simhash_sig_sql() -> str:
         f"THEN 1 ELSE -1 END)) > 0 THEN (CAST(1 AS BIGINT) << {i}) ELSE 0 END)"
         for i in range(D.SIMHASH_BITS)
     )
-    tok_hash = _md5l("t")
+    tok_hash = duckdb_md5_long("t")
     return f"""
 WITH hashed AS (
     SELECT doc_id,
@@ -505,7 +503,7 @@ def v1_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _ann_oracle() -> str:
     # Reproduce the md5-derived hyperplanes and sign-bit bucketing.
-    plane_hash = _md5l("'plane:' || p || ':' || i")
+    plane_hash = duckdb_md5_long("p || ':' || i", salt="plane:")
     plane = (
         f"list_transform(range({S.EMBED_DIM}), i -> "
         f"({plane_hash} % 2000000) / 1000000.0 - 1.0)"
@@ -787,7 +785,7 @@ def t5_doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
 SELECT doc_id, source, lang
 FROM documents
-WHERE {_md5l("CAST(doc_id AS VARCHAR)")} % 100 <
+WHERE {duckdb_md5_long("CAST(doc_id AS VARCHAR)")} % 100 <
       CASE WHEN source IN ('src0', 'src1', 'src2', 'src3') THEN 80
            WHEN source IN ('src18', 'src19') THEN 10
            ELSE 40 END
@@ -869,7 +867,7 @@ def t8_bigram_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _multiprobe_oracle() -> str:
-    plane_hash = _md5l("'plane:' || p || ':' || i")
+    plane_hash = duckdb_md5_long("p || ':' || i", salt="plane:")
     plane = (
         f"list_transform(range({S.EMBED_DIM}), i -> "
         f"({plane_hash} % 2000000) / 1000000.0 - 1.0)"
@@ -923,7 +921,7 @@ def v4_multiprobe_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 WITH base AS (
     SELECT doc_id,
            CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-           CAST({_md5l("CAST(doc_id AS VARCHAR)")} % 8 AS INT) AS shard
+           CAST({duckdb_md5_long("CAST(doc_id AS VARCHAR)")} % 8 AS INT) AS shard
     FROM documents
 ),
 with_off AS (
@@ -954,7 +952,7 @@ def t9_pack_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 WITH sampled AS (
     SELECT doc_id, text
     FROM documents
-    WHERE {_md5l("CAST(doc_id AS VARCHAR)")} % 100 <
+    WHERE {duckdb_md5_long("CAST(doc_id AS VARCHAR)")} % 100 <
           CASE WHEN source IN ('src0', 'src1', 'src2', 'src3') THEN 80
                WHEN source IN ('src18', 'src19') THEN 10
                ELSE 40 END
@@ -969,7 +967,7 @@ keep AS (
 ),
 survivors AS (
     SELECT g.doc_id, CAST(g.n_words AS BIGINT) AS n_tokens,
-           CAST({_md5l("CAST(g.doc_id AS VARCHAR)")} % 8 AS INT) AS shard
+           CAST({duckdb_md5_long("CAST(g.doc_id AS VARCHAR)")} % 8 AS INT) AS shard
     FROM good g JOIN keep k ON g.doc_id = k.doc_id
 ),
 packed AS (
@@ -1136,7 +1134,7 @@ def v5_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _ann_graph_oracle() -> str:
     # same md5-derived hyperplane bucketing as _ann_oracle, but every
     # vector is a query and candidates come from its own bucket only
-    plane_hash = _md5l("'plane:' || p || ':' || i")
+    plane_hash = duckdb_md5_long("p || ':' || i", salt="plane:")
     plane = (
         f"list_transform(range({S.EMBED_DIM}), i -> "
         f"({plane_hash} % 2000000) / 1000000.0 - 1.0)"
@@ -1259,7 +1257,7 @@ WITH grams AS (
     FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents)
     WHERE len(w) >= 5
 ),
-hashed AS (SELECT doc_id, {_md5l("gram")} AS gram_h FROM grams),
+hashed AS (SELECT doc_id, {duckdb_md5_long("gram")} AS gram_h FROM grams),
 train AS (SELECT * FROM hashed WHERE doc_id % 50 <> 0),
 bench AS (SELECT doc_id AS bench_id, gram_h FROM hashed WHERE doc_id % 50 = 0),
 totals AS (SELECT doc_id, CAST(count(DISTINCT gram_h) AS BIGINT) AS n_grams
@@ -1571,8 +1569,8 @@ reach(a, b) AS (
 clusters AS (SELECT a AS doc_id, min(b) AS cluster_id FROM reach GROUP BY a),
 assigned AS (
     SELECT d.doc_id, c.cluster_id,
-           CAST(('0x' || substr(md5('split:' || CAST(c.cluster_id AS VARCHAR)), 1, 15))
-                AS BIGINT) % 100 AS bucket,
+           {duckdb_md5_long("CAST(c.cluster_id AS VARCHAR)", salt="split:")}
+               % 100 AS bucket,
            len(string_split(d.text, ' ')) AS n_words
     FROM documents d JOIN clusters c USING (doc_id)
 )
@@ -1603,12 +1601,7 @@ def pipe3_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_a", "doc_b"
     )
     clusters = D.dedup_clusters(docs.select("doc_id"), pairs)
-    bucket = (
-        D._md5_long_expr(
-            F.concat(F.lit("split:"), F.col("cluster_id").cast("string"))
-        )
-        % 100
-    )
+    bucket = md5_long(F.col("cluster_id").cast("string"), salt="split:") % 100
     assigned = (
         docs.select("doc_id", F.size(F.split("text", " ")).alias("n_words"))
         .join(clusters, "doc_id")
@@ -1881,7 +1874,7 @@ WITH t AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
 st AS (
     SELECT doc_id, w,
            list_concat([1], list_filter(range(2, len(w) + 1),
-               i -> ({_md5l('w[i]')}) % 32 = 0)) AS starts
+               i -> ({duckdb_md5_long('w[i]')}) % 32 = 0)) AS starts
     FROM t
 ),
 ch AS (
@@ -1959,7 +1952,7 @@ def t18_bigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
 WITH sdocs AS (
     SELECT doc_id, text, source FROM documents
-    WHERE ({_md5l('CAST(doc_id AS VARCHAR)')}) % 100 < 50
+    WHERE ({duckdb_md5_long('CAST(doc_id AS VARCHAR)')}) % 100 < 50
 ),
 t AS (SELECT doc_id, string_split(text, ' ') AS w FROM sdocs),
 dbg AS (
@@ -1992,7 +1985,7 @@ kt AS (SELECT doc_id, string_split(text, ' ') AS w FROM keepers),
 st AS (
     SELECT doc_id, w,
            list_concat([1], list_filter(range(2, len(w) + 1),
-               i -> ({_md5l('w[i]')}) % 32 = 0)) AS starts
+               i -> ({duckdb_md5_long('w[i]')}) % 32 = 0)) AS starts
     FROM kt
 ),
 ch AS (
@@ -2083,7 +2076,7 @@ sh AS (
     FROM t
 ),
 g AS (
-    SELECT doc_id, {_md5l('unnest(grams)')} AS h FROM sh
+    SELECT doc_id, {duckdb_md5_long('unnest(grams)')} AS h FROM sh
 ),
 fs AS (SELECT h, min(doc_id) AS first FROM g GROUP BY h)
 SELECT g.doc_id,
@@ -2351,7 +2344,7 @@ def _incremental_dedup_oracle() -> str:
 WITH {_SHINGLES_CTE},
 hashed AS (
     SELECT doc_id, shingles,
-           list_transform(shingles, s -> {_md5l("s")}) AS hs
+           list_transform(shingles, s -> {duckdb_md5_long("s")}) AS hs
     FROM sh
 ),
 sig AS (
@@ -2422,7 +2415,7 @@ def d9_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 WITH t AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
 wins AS (
     SELECT doc_id, i AS pos,
-           {_md5l("array_to_string(w[i:i+7], ' ')")} AS wh
+           {duckdb_md5_long("array_to_string(w[i:i+7], ' ')")} AS wh
     FROM (SELECT doc_id, w, unnest(range(1, len(w) - 6)) AS i
           FROM t WHERE len(w) >= 8)
 ),
@@ -2460,12 +2453,11 @@ def t23_dup_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "t24_deterministic_shuffle",
-    oracle="""
+    oracle=f"""
 WITH k AS (
     SELECT doc_id,
            md5('shuffle:' || CAST(doc_id AS VARCHAR)) AS sort_key,
-           CAST(('0x' || substr(md5('shuffle:' || CAST(doc_id AS VARCHAR)), 1, 15))
-                AS BIGINT) % 16 AS shard
+           {duckdb_md5_long("CAST(doc_id AS VARCHAR)", salt="shuffle:")} % 16 AS shard
     FROM documents
 )
 SELECT doc_id, CAST(shard AS BIGINT) AS shard,
@@ -2609,7 +2601,7 @@ def t25_bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "pipe5_curriculum_order",
-    oracle="""
+    oracle=f"""
 WITH f AS (
     SELECT doc_id,
            len(string_split(text, ' ')) AS n_words,
@@ -2627,8 +2619,7 @@ q AS (
                + least(n_stop * 1.0 / greatest(n_words, 1) * 5, 1.0) * 0.3, 6) * 4)
                AS BIGINT), 3) AS quality_bin,
            md5('curr:' || CAST(doc_id AS VARCHAR)) AS sort_key,
-           CAST(('0x' || substr(md5('curr:' || CAST(doc_id AS VARCHAR)), 1, 15))
-                AS BIGINT) % 8 AS shard
+           {duckdb_md5_long("CAST(doc_id AS VARCHAR)", salt="curr:")} % 8 AS shard
     FROM f
 ),
 pos AS (
@@ -2686,7 +2677,7 @@ def v9_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "pipe6_temperature_mix",
-    oracle="""
+    oracle=f"""
 WITH counts AS (SELECT source, count(*) AS n_docs FROM documents GROUP BY source),
 rates AS (
     SELECT source, n_docs,
@@ -2699,8 +2690,8 @@ rates AS (
 ),
 g AS (
     SELECT d.source, r.n_docs, r.rate_ppm,
-           CASE WHEN CAST(('0x' || substr(md5('tmix:' || CAST(d.doc_id AS VARCHAR)), 1, 15))
-                          AS BIGINT) % 1000000 < r.rate_ppm
+           CASE WHEN {duckdb_md5_long("CAST(d.doc_id AS VARCHAR)", salt="tmix:")}
+                          % 1000000 < r.rate_ppm
                 THEN 1 ELSE 0 END AS _in
     FROM documents d JOIN rates r ON d.source = r.source
 )
@@ -2744,7 +2735,7 @@ toks AS (
 ),
 wins AS (
     SELECT doc_id, i AS pos,
-           {_md5l("array_to_string(w[i:i+7], ' ')")} AS wh
+           {duckdb_md5_long("array_to_string(w[i:i+7], ' ')")} AS wh
     FROM (SELECT doc_id, w, unnest(range(1, len(w) - 6)) AS i
           FROM t WHERE len(w) >= 8)
 ),
@@ -2911,7 +2902,7 @@ def t29_gopher_quality_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
 WITH t AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
 g AS (
     SELECT doc_id, i AS pos,
-           {_md5l("w[i] || ' ' || w[i+1] || ' ' || w[i+2] || ' ' || w[i+3]")} AS wh
+           {duckdb_md5_long("w[i] || ' ' || w[i+1] || ' ' || w[i+2] || ' ' || w[i+3]")} AS wh
     FROM t, unnest(range(1, len(w) - 2)) AS u(i)
 ),
 wsel AS (
@@ -2943,7 +2934,7 @@ def t30_winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _v10_oracle() -> str:
-    plane_hash = _md5l("'plane:' || p || ':' || i")
+    plane_hash = duckdb_md5_long("p || ':' || i", salt="plane:")
     plane = (
         f"list_transform(range({S.EMBED_DIM}), i -> "
         f"({plane_hash} % 2000000) / 1000000.0 - 1.0)"
@@ -3195,7 +3186,7 @@ def pipe7_web_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
 WITH s AS (
     SELECT doc_id,
-           ({_md5l("'mq:' || CAST(doc_id AS VARCHAR)")}) % 2000001 - 1000000
+           ({duckdb_md5_long("CAST(doc_id AS VARCHAR)", salt="mq:")}) % 2000001 - 1000000
            + least(length(text), 1000) * 500 AS mq_logit_u
     FROM documents
 )
@@ -3362,7 +3353,7 @@ WITH scored AS (
     SELECT doc_id,
            CAST(len(list_filter(string_split(text, ' '), t -> t <> ''))
                 AS BIGINT) AS n_tokens,
-           {_md5l("'wps:' || CAST(doc_id AS VARCHAR)")} % {X.WPS_U_MOD} AS u
+           {duckdb_md5_long("CAST(doc_id AS VARCHAR)", salt="wps:")} % {X.WPS_U_MOD} AS u
     FROM documents
 )
 SELECT doc_id, n_tokens,
@@ -3389,7 +3380,7 @@ def t33_weighted_priority_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 WITH t AS (SELECT doc_id, source, string_split(text, ' ') AS w FROM documents),
 wins AS (
     SELECT doc_id, source, i AS pos,
-           {_md5l("array_to_string(w[i:i+1], ' ')")} AS wh
+           {duckdb_md5_long("array_to_string(w[i:i+1], ' ')")} AS wh
     FROM (SELECT doc_id, source, w, unnest(range(1, len(w))) AS i
           FROM t WHERE len(w) >= 2)
 ),
@@ -3768,8 +3759,8 @@ WITH tok AS (
 ),
 hashed AS (
     SELECT doc_id,
-           {_md5l("'fh:' || t")} % 256 AS bucket,
-           CASE WHEN {_md5l("'fhs:' || t")} % 2 = 1 THEN 1 ELSE -1 END AS sgn
+           {duckdb_md5_long("t", salt="fh:")} % 256 AS bucket,
+           CASE WHEN {duckdb_md5_long("t", salt="fhs:")} % 2 = 1 THEN 1 ELSE -1 END AS sgn
     FROM tok WHERE t <> ''
 ),
 vec AS (
@@ -3790,27 +3781,16 @@ FROM vec GROUP BY doc_id
     "expectation, keeping inner products unbiased), per-document "
     "bucket weights are signed counts, and the query emits the "
     "sparse-vector summary (nnz / L1 / L2^2) — ALL integer-exact on "
-    "both engines via the portable md5 hash family. Plan: explode -> "
-    "(doc, bucket) partial-aggregable sum -> per-doc aggregate; the "
+    "both engines via the portable md5 hash family. Plan: explode "
+    "(operators/text.hashed_tokens) -> (doc, bucket) "
+    "partial-aggregable sum -> per-doc aggregate; the "
     "exchange payload is at most 256 rows per document regardless of "
     "document length — the dimensionality fix IS the scale bound, "
     "which is why the technique serves 100 TB corpora without a "
     "vocabulary pass.",
 )
 def fe3_feature_hashing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from kafka_flink_spark.functions.hashing import md5_long
-
-    docs = load_table(spark, sf_dir, "documents")
-    tok = docs.select(
-        "doc_id", F.explode(F.split("text", " ")).alias("t")
-    ).filter(F.col("t") != "")
-    hashed = tok.select(
-        "doc_id",
-        (md5_long(F.concat(F.lit("fh:"), F.col("t"))) % 256).alias("bucket"),
-        F.when(
-            md5_long(F.concat(F.lit("fhs:"), F.col("t"))) % 2 == 1, 1
-        ).otherwise(-1).alias("sgn"),
-    )
+    hashed = X.hashed_tokens(load_table(spark, sf_dir, "documents"))
     vec = hashed.groupBy("doc_id", "bucket").agg(F.sum("sgn").alias("w"))
     return vec.groupBy("doc_id").agg(
         F.count(F.when(F.col("w") != 0, 1)).cast("long").alias("nnz"),
@@ -3860,7 +3840,7 @@ def d12_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 WITH t AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
 ln AS (
     SELECT doc_id, len(w) AS n_tokens, i AS line_idx,
-           {_md5l("array_to_string(w[(i*8+1):(i*8+8)], ' ')")} AS lh,
+           {duckdb_md5_long("array_to_string(w[(i*8+1):(i*8+8)], ' ')")} AS lh,
            least(8, len(w) - i * 8) AS nw
     FROM (SELECT doc_id, w,
                  unnest(range(0, CAST(ceil(len(w) / 8.0) AS BIGINT))) AS i
@@ -4043,7 +4023,6 @@ FROM canon
 def pipe9_entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
-    from kafka_flink_spark.functions.hashing import md5_long
     from kafka_flink_spark.operators.graph import connected_components
 
     p = load_table(spark, sf_dir, "part").select(
@@ -4105,7 +4084,7 @@ def pipe9_entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
 WITH tok AS (
     SELECT doc_id,
            CAST(lang = 'en' AS INT) AS is_tgt,
-           {_md5l("w")} % 256 AS b
+           {duckdb_md5_long("w")} % 256 AS b
     FROM (SELECT doc_id, lang, unnest(string_split(text, ' ')) AS w
           FROM documents)
 ),
@@ -4148,9 +4127,19 @@ def t37_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Segment i's 'pixel' (of 60): the first md5 byte of its character
+# range, as ahash_media reads it (``hashlib.md5(seg).digest()[0]``).
+_M8_PIXEL = duckdb_md5_prefix(
+    "substr(payload, CAST(i * (L // 60) + least(i, L % 60) + 1 AS INT), "
+    "CAST((L // 60) + CASE WHEN i < L % 60 THEN 1 ELSE 0 END AS INT))",
+    hex_chars=2,
+    sql_type="INT",
+)
+
+
 @register(
     "m8_perceptual_near_dup",
-    oracle="""
+    oracle=f"""
 WITH media AS (
     SELECT doc_id AS media_id,
            (['image','audio','video'])[CAST(doc_id % 3 AS INT) + 1]
@@ -4172,10 +4161,7 @@ imgs AS (
 ),
 px AS (
     SELECT media_id, i,
-           CAST(('0x' || substr(md5(substr(payload,
-                CAST(i * (L // 60) + least(i, L % 60) + 1 AS INT),
-                CAST((L // 60) + CASE WHEN i < L % 60 THEN 1 ELSE 0 END
-                     AS INT))), 1, 2)) AS INT) AS v
+           {_M8_PIXEL} AS v
     FROM (SELECT media_id, payload, L, unnest(range(0, 60)) AS i FROM imgs)
 ),
 tot AS (SELECT media_id, sum(v) AS s FROM px GROUP BY 1),
@@ -4331,10 +4317,9 @@ def _nn_descent_oracle(build_k: int, rounds: int, out_k: int) -> str:
     """Unrolled-SQL NN-descent (the gr1/gr4 technique): the hash init
     and each refinement round as CTE levels, bit-matching the
     operator's deterministic recurrence."""
-    md5w = (
-        "CAST(('0x' || substr(md5('nnd:' || CAST(a.vec_id AS VARCHAR) || ':' "
-        "|| CAST(t.j AS VARCHAR)), 1, 15)) AS BIGINT) % (SELECT n FROM nn)"
-    )
+    md5w = duckdb_md5_long(
+        "CAST(a.vec_id AS VARCHAR) || ':' || CAST(t.j AS VARCHAR)", salt="nnd:"
+    ) + " % (SELECT n FROM nn)"
     levels = [
         f"""ring AS (
     SELECT DISTINCT a.vec_id AS u, {md5w} AS w
@@ -4567,7 +4552,7 @@ def t38_unicode_nfc(spark: SparkSession, sf_dir: str) -> DataFrame:
 _FE6_ORACLE = f"""
 WITH w AS (
     SELECT CAST(range AS BIGINT) AS bucket,
-           {_md5l("'lmw:' || CAST(range AS VARCHAR)")} % 2001 - 1000 AS w
+           {duckdb_md5_long("CAST(range AS VARCHAR)", salt="lmw:")} % 2001 - 1000 AS w
     FROM range(256)
 ),
 tok AS (
@@ -4575,8 +4560,8 @@ tok AS (
 ),
 hashed AS (
     SELECT doc_id,
-           {_md5l("'fh:' || t")} % 256 AS bucket,
-           CASE WHEN {_md5l("'fhs:' || t")} % 2 = 1 THEN 1 ELSE -1 END AS sgn
+           {duckdb_md5_long("t", salt="fh:")} % 256 AS bucket,
+           CASE WHEN {duckdb_md5_long("t", salt="fhs:")} % 2 = 1 THEN 1 ELSE -1 END AS sgn
     FROM tok WHERE t <> ''
 ),
 vec AS (
@@ -4800,7 +4785,9 @@ def _graph_ann_oracle(k: int = 10, k_graph: int = 8, beam: int = 8, rounds: int 
     src before the window cannot change a per-src ranking)."""
     ids = ", ".join(str(i) for i in _QUERY_IDS)
     cos = _duck_cosine("q.qv", "e.v")
-    entry_hash = _md5l("'gann:' || CAST(query_id AS VARCHAR) || ':' || CAST(j AS VARCHAR)")
+    entry_hash = duckdb_md5_long(
+        "CAST(query_id AS VARCHAR) || ':' || CAST(j AS VARCHAR)", salt="gann:"
+    )
     n_entries_plus_1 = n_entries + 1
     parts = [
         f"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),

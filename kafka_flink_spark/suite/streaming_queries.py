@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kafka_flink_spark.functions.hashing import duckdb_md5_long, md5_long
 from kafka_flink_spark.operators.iterative import pin
 from kafka_flink_spark.sources.fixtures import TRADES_ORACLE_CTE, scratch_dir, trades_view
 from kafka_flink_spark.streaming.candles_stream import (
@@ -1503,7 +1504,6 @@ def _w33_oracle() -> str:
     Pair (a < b) emits iff b still joined the history (b.rn <= cap,
     all earlier members visible) OR a is the hub."""
     from kafka_flink_spark.operators.dedup import SIMHASH_BITS
-    from kafka_flink_spark.suite.llm_queries import _md5l
 
     terms = " + ".join(
         f"(CASE WHEN list_sum(list_transform(hs, h -> CASE WHEN (h >> {i}) & 1 = 1 "
@@ -1521,7 +1521,7 @@ def _w33_oracle() -> str:
         )
         off += width
     banded = "\n    UNION ALL ".join(chunk_selects)
-    tok_hash = _md5l("t")
+    tok_hash = duckdb_md5_long("t")
     return f"""
 WITH docs_all AS (
     SELECT doc_id, text FROM documents
@@ -1640,8 +1640,8 @@ _W32_ORACLE = f"""
 WITH {TRADES_ORACLE_CTE},
 b AS (
     SELECT product, ts, price, qty,
-           (CAST(('0x' || substr(md5('late:' || CAST(seq AS VARCHAR)), 1, 15))
-                 AS BIGINT) % 10 = 7) AS is_late,
+           ({duckdb_md5_long("CAST(seq AS VARCHAR)", salt="late:")} % 10 = 7)
+               AS is_late,
            date_trunc('hour', ts) AS ws,
            date_trunc('hour', ts) + INTERVAL 1 HOUR AS we
     FROM trades
@@ -1716,17 +1716,7 @@ def w32_allowed_lateness_refire(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kafka_flink_spark.streaming.lateness import allowed_lateness_candles
 
     trades = trades_view(spark, sf_dir).select("ts", "product", "price", "qty", "seq")
-    is_late = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("late:"), F.col("seq").cast("string"))), 1, 15
-            ),
-            16,
-            10,
-        ).cast("long")
-        % 10
-        == 7
-    )
+    is_late = md5_long(F.col("seq").cast("string"), salt="late:") % 10 == 7
     t = trades.withColumn("is_late", is_late)
     mx = trades.agg(F.max("ts").alias("mx"))
 
@@ -2069,16 +2059,10 @@ from kafka_flink_spark.suite.llm_queries import _FE6_ORACLE as _W37_ORACLE  # no
 )
 def w37_stream_classifier_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
-    from kafka_flink_spark.functions.hashing import md5_long
+    from kafka_flink_spark.operators.text import bucket_weights, hashed_tokens
     from kafka_flink_spark.sources.fixtures import load_table
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    weights = spark.range(256).select(
-        F.col("id").alias("bucket"),
-        (md5_long(F.concat(F.lit("lmw:"), F.col("id").cast("string"))) % 2001 - 1000)
-        .cast("long")
-        .alias("w"),
-    )
 
     tmpdir = scratch_dir(prefix="w37_src_")  # atexit-cleaned
     src = _write_replay_files(
@@ -2090,21 +2074,12 @@ def w37_stream_classifier_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", "1")
         .parquet(src)
     )
-    tok = stream.select(
-        "doc_id", F.explode(F.split("text", " ")).alias("t")
-    ).filter(F.col("t") != "")
-    hashed = tok.select(
-        "doc_id",
-        (md5_long(F.concat(F.lit("fh:"), F.col("t"))) % 256).alias("bucket"),
-        F.when(md5_long(F.concat(F.lit("fhs:"), F.col("t"))) % 2 == 1, 1)
-        .otherwise(-1)
-        .alias("sgn"),
-    )
     # single stateful aggregation (no intermediate bucket agg on the
     # stream - chained streaming aggregations need append+watermark);
     # the broadcast weight join happens BELOW it, stateless.
     agg = (
-        hashed.join(F.broadcast(weights), "bucket")
+        hashed_tokens(stream)
+        .join(F.broadcast(bucket_weights(spark)), "bucket")
         .groupBy("doc_id")
         .agg(
             F.count("*").cast("long").alias("n_tokens"),

@@ -60,6 +60,129 @@ def test_get_session_shuffle_partitions_argument_wins(spark):
     assert spark.conf.get(key) == before
 
 
+def test_get_session_master_from_cpu_setting(monkeypatch):
+    """An integer-valued ``SPARK_GRAFT_CPUS`` ("8.0") gives ``local[8]``;
+    a non-numeric one gives ``local[*]``. The builder raises at
+    ``.master`` so no JVM starts."""
+    from pyspark.sql import SparkSession
+
+    from kafka_flink_spark.session import get_session
+
+    class Stop(Exception):
+        pass
+
+    seen = []
+
+    def master(self, url):
+        seen.append(url)
+        raise Stop
+
+    monkeypatch.setattr(SparkSession.Builder, "master", master)
+    for cpus in ("8.0", "abc"):
+        monkeypatch.setenv("SPARK_GRAFT_CPUS", cpus)
+        try:
+            get_session()
+        except Stop:
+            pass
+    assert seen == ["local[8]", "local[*]"]
+
+
+def _hash_spellings(tree) -> list[int]:
+    """Line numbers in ``tree`` that write out the 60-bit md5 hash by
+    hand: an ``F.conv(`` call, a string constant (f-string parts
+    included) containing ``substr(md5(``, or ``hexdigest()[:15]``."""
+    import ast
+
+    lines = []
+    for node in ast.walk(tree):
+        if (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "conv"
+            and isinstance(node.func.value, ast.Name)
+            and node.func.value.id == "F"
+        ):
+            lines.append(node.lineno)
+        elif (
+            isinstance(node, ast.Constant)
+            and isinstance(node.value, str)
+            and "substr(md5(" in node.value
+        ):
+            lines.append(node.lineno)
+        elif (
+            isinstance(node, ast.Subscript)
+            and isinstance(node.value, ast.Call)
+            and isinstance(node.value.func, ast.Attribute)
+            and node.value.func.attr == "hexdigest"
+            and isinstance(node.slice, ast.Slice)
+            and node.slice.lower is None
+            and isinstance(node.slice.upper, ast.Constant)
+            and node.slice.upper.value == 15
+        ):
+            lines.append(node.lineno)
+    return lines
+
+
+def test_one_way_to_hash():
+    """The 60-bit md5 hash is written out only in
+    ``functions/hashing.py`` (Spark, DuckDB SQL and Python forms); every
+    other module calls it."""
+    import ast
+    import pathlib
+
+    import kafka_flink_spark
+
+    injected = (
+        "h = F.conv(F.substring(F.md5(c), 1, 15), 16, 10)\n"
+        "q = f\"CAST(('0x' || substr(md5({e}), 1, 15)) AS BIGINT)\"\n"
+        "v = int(hashlib.md5(b).hexdigest()[:15], 16)\n"
+    )
+    assert _hash_spellings(ast.parse(injected)) == [1, 2, 3]
+
+    root = pathlib.Path(kafka_flink_spark.__file__).parent
+    offenders = [
+        f"{path.relative_to(root)}:{line}"
+        for path in sorted(root.rglob("*.py"))
+        if path.relative_to(root).as_posix() != "functions/hashing.py"
+        for line in _hash_spellings(ast.parse(path.read_text(), str(path)))
+    ]
+    assert not offenders, offenders
+
+
+def test_hash_spellings_agree(spark):
+    """``md5_long`` (Spark), ``duckdb_md5_long`` (DuckDB) and
+    ``md5_long_value`` (Python) return the same integer, salted or not,
+    for empty, short, non-ASCII and long inputs."""
+    import duckdb
+
+    from kafka_flink_spark.functions.hashing import (
+        duckdb_md5_long,
+        md5_long,
+        md5_long_value,
+    )
+
+    values = ["", "a", "naïve", "doc:42", "x" * 2048]
+    rows = list(enumerate(values))
+    got_spark = [
+        (r["i"], r["h"], r["hs"])
+        for r in spark.createDataFrame(rows, "i int, s string")
+        .select("i", md5_long("s").alias("h"), md5_long("s", salt="fh:").alias("hs"))
+        .orderBy("i")
+        .collect()
+    ]
+    con = duckdb.connect()
+    con.execute("CREATE TABLE t (i INTEGER, s VARCHAR)")
+    con.executemany("INSERT INTO t VALUES (?, ?)", rows)
+    got_duckdb = con.execute(
+        f"SELECT i, {duckdb_md5_long('s')}, {duckdb_md5_long('s', salt='fh:')} "
+        "FROM t ORDER BY i"
+    ).fetchall()
+    want = [(i, md5_long_value(s), md5_long_value("fh:" + s)) for i, s in rows]
+    assert got_spark == want
+    assert [tuple(r) for r in got_duckdb] == want
+    assert len({h for _, h, _ in want}) == len(values)
+
+
 def test_one_way_to_pin():
     """Every lineage cut in the package goes through
     ``operators.iterative.pin``: no other code calls

@@ -1192,31 +1192,30 @@ def test_stream_classifier_gate_window_free_broadcast_join(spark):
     per-doc fold is ONE update-mode aggregation), the weight relation
     joins the stream, and the plan is a genuine stream. Gate on the
     analyzed logical plan like w36's."""
-    import os
     import shutil
+    import tempfile
 
     from pyspark.sql import functions as F
 
-    from kafka_flink_spark.functions.hashing import md5_long
+    from kafka_flink_spark.operators.text import bucket_weights, hashed_tokens
 
     docs = load_table(spark, SF_SMALL, "documents").select("doc_id", "text")
-    import tempfile
-
     tmp = tempfile.mkdtemp(prefix="w37_gate_")
     try:
         docs.limit(10).coalesce(1).write.mode("overwrite").parquet(f"{tmp}/src")
         stream = spark.readStream.schema("doc_id long, text string").parquet(
             f"{tmp}/src"
         )
-        weights = spark.range(256).select(
-            F.col("id").alias("bucket"),
-            (md5_long(F.concat(F.lit("lmw:"), F.col("id").cast("string"))) % 2001 - 1000).alias("w"),
+        # the frame w37 runs: the same two operators and the same fold
+        agg = (
+            hashed_tokens(stream)
+            .join(F.broadcast(bucket_weights(spark)), "bucket")
+            .groupBy("doc_id")
+            .agg(
+                F.count("*").cast("long").alias("n_tokens"),
+                F.sum(F.col("sgn") * F.col("w")).cast("long").alias("bow_margin"),
+            )
         )
-        tok = stream.select("doc_id", F.explode(F.split("text", " ")).alias("t"))
-        hashed = tok.select(
-            "doc_id", (md5_long(F.concat(F.lit("fh:"), F.col("t"))) % 256).alias("bucket")
-        )
-        agg = hashed.join(F.broadcast(weights), "bucket").groupBy("doc_id").count()
         assert agg.isStreaming
         lp = agg._jdf.queryExecution().analyzed().toString()
         assert "Window [" not in lp, lp[:1500]
